@@ -35,8 +35,7 @@ object PlanProbe {
         s.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
       println(s"dumped $name")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_planprobe_").toFile
-    try {
+    graft.util.Fs.withTempDir("graft_planprobe_") { tmp =>
       val path = new java.io.File(tmp, "t").getAbsolutePath
       val docs = Tables.t(spark, sfDir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -58,12 +57,6 @@ object PlanProbe {
         SnapshotStore.readVersion(spark, path,
             SnapshotStore.currentVersion(spark, path))
           .filter(col("doc_id").between(100, 200) && col("lang") =!= "en"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(tmp)
     }
     spark.stop()
   }

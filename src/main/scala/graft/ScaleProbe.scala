@@ -54,9 +54,8 @@ object ScaleProbe {
         spark.sparkContext.parallelize(trained.collect().toSeq, 1),
         trained.schema)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scaleprobe_").toFile
-    val idx = new java.io.File(tmp, "idx").getAbsolutePath
-    try {
+    graft.util.Fs.withTempDir("graft_scaleprobe_") { tmp =>
+      val idx = new java.io.File(tmp, "idx").getAbsolutePath
       val results = Seq(
         "kmeans_train" -> tTrain,
         "ivf_probe" -> timed2 {
@@ -80,6 +79,6 @@ object ScaleProbe {
       val js = results.map { case (n, v) => "\"" + n + "\":" + v }
         .mkString("{", ",", "}")
       println(s"""{"sf":"$dir","k":$k,"ops":$js}""")
-    } finally graft.util.Fs.deleteTree(tmp)
+    }
   }
 }

@@ -48,9 +48,8 @@ object SnapshotProbe {
       s
     }
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snapprobe_").toFile
-    val path = new java.io.File(tmp, "t").getAbsolutePath
-    try {
+    graft.util.Fs.withTempDir("graft_snapprobe_") { tmp =>
+      val path = new java.io.File(tmp, "t").getAbsolutePath
       val ops = scala.collection.mutable.LinkedHashMap.empty[String, Double]
       ops("create_clustered") = time {
         SnapshotStore.create(spark, docs, path,
@@ -146,7 +145,7 @@ object SnapshotProbe {
       println(s"""{"sf":"$dir","rows":$rows,"files":$nFiles,""" +
         s""""ops":{$opsJson},"append_commit_vs_files":{$trendJson},""" +
         s""""vacuum_vs_live_files":{$vtrendJson}}""")
-    } finally graft.util.Fs.deleteTree(tmp)
+    }
     spark.stop()
   }
 }

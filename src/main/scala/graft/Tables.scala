@@ -28,9 +28,16 @@ object Tables {
     * TIMESTAMP_NTZ). Adapt on the read schema so both generations load to
     * identical session-TZ timestamps (session TZ is pinned UTC everywhere,
     * so the NTZ→LTZ cast is instant-preserving). */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    withEventsTs(spark)(spark.read.parquet(s"$dir/events.parquet"))
+
+  /** The one `ts` normalisation of [[events]], for batch and streaming
+    * reads alike: `read` runs with `nanosAsLong` set, and its `ts` column
+    * is adapted on the frame's schema (the declared schema, for a
+    * stream). */
+  def withEventsTs(spark: SparkSession)(read: => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = read
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _: TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))

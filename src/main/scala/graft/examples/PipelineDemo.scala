@@ -1,7 +1,5 @@
 package graft.examples
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 
 import graft.ingest.Donki
@@ -34,16 +32,16 @@ object PipelineDemo {
       spark, Donki.flrSchema, flaky, Parity.jsonBody(Parity.batchA),
       retries = 2, delayMs = 10L)
     println(s"[demo] fetch live=$live (fallback engaged=${!live})")
-    val demoTmp = Files.createTempDirectory("graft_demo_")
-    graft.util.Fs.deleteOnExit(demoTmp.toFile)
-    val table = demoTmp.toString + "/solar_flare_data"
-    DedupAppend.append(spark, Donki.project(raw), table,
-      keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"))
-    DedupAppend.append(spark, Donki.project(raw), table,
-      keys = Seq("flr_id"), tieBreak = Seq("class_type", "link")) // re-run: no-op
-    val flares = spark.read.parquet(table)
-    println(s"[demo] solar_flare_data rows after double append: ${flares.count()}")
-    flares.show(3, truncate = false)
+    graft.util.Fs.withTempDir("graft_demo_") { demoTmp =>
+      val table = demoTmp.toString + "/solar_flare_data"
+      DedupAppend.append(spark, Donki.project(raw), table,
+        keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"))
+      DedupAppend.append(spark, Donki.project(raw), table,
+        keys = Seq("flr_id"), tieBreak = Seq("class_type", "link")) // re-run: no-op
+      val flares = spark.read.parquet(table)
+      println(s"[demo] solar_flare_data rows after double append: ${flares.count()}")
+      flares.show(3, truncate = false)
+    }
 
     // 2. streaming: tumbling event-time agg with watermark over a landing dir
     val windows = EventStreams.runOnce(spark, sfDir, "demo_stream")
@@ -97,14 +95,14 @@ object PipelineDemo {
     val shards = graft.operators.Curation.shardAssign(gated, 8)
     val skew = shards.agg(
       (max(col("total_tokens")) - min(col("total_tokens"))).as("d")).first().getLong(0)
-    val demoTmpM = Files.createTempDirectory("graft_demo_m_")
-    graft.util.Fs.deleteOnExit(demoTmpM.toFile)
-    val mTable = demoTmpM.toString + "/docs"
-    val fileCounts = (0 until 4).map { i =>
-      graft.operators.Maintenance.appendCycle(spark,
-        docs.filter(pmod(col("doc_id"), lit(4)) === i), mTable,
-        keys = Seq("doc_id"), tieBreak = Nil,
-        maxFiles = 6, targetFileBytes = 64L * 1024 * 1024)
+    val fileCounts = graft.util.Fs.withTempDir("graft_demo_m_") { demoTmpM =>
+      val mTable = demoTmpM.toString + "/docs"
+      (0 until 4).map { i =>
+        graft.operators.Maintenance.appendCycle(spark,
+          docs.filter(pmod(col("doc_id"), lit(4)) === i), mTable,
+          keys = Seq("doc_id"), tieBreak = Nil,
+          maxFiles = 6, targetFileBytes = 64L * 1024 * 1024)
+      }
     }
     println(s"[demo] sharding: 8 shards, max-min token spread $skew;" +
       s" maintenance cycles ended at file counts ${fileCounts.mkString(",")}")

@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
   * Idempotency contrast with [[UpsertState]]: latest-wins is idempotent
   * (re-delivery is a no-op), but SUMS ARE NOT — a replayed batch would
   * double-count. The streaming composition therefore relies on the
-  * checkpoint's exactly-once-per-file guarantee (`Trigger.AvailableNow` +
-  * checkpointLocation), which is precisely what it provides; at-least-once
-  * delivery upstream of the landing dir needs a dedup-append
-  * ([[DedupAppend]]) in front. This asymmetry is documented here because
-  * it decides which gate a 100 TB pipeline needs where.
+  * checkpoint's exactly-once-per-file guarantee (the AvailableNow
+  * [[graft.streaming.EventStreams.drain]] over a checkpoint), which is
+  * precisely what it provides; at-least-once delivery upstream of the
+  * landing dir needs a dedup-append ([[DedupAppend]]) in front. This
+  * asymmetry is documented here because it decides which gate a 100 TB
+  * pipeline needs where.
   *
   * Scale note: per batch, `partial` is the only data-sized operation (one
   * partial+final agg over the batch); `merge` touches two ROLLUP-sized

@@ -72,9 +72,8 @@ object ChangeData {
     * the two maintenance algebras a 100 TB pipeline composes (and whose
     * replay guarantees differ: sums need the checkpoint, latest-wins is
     * idempotent on its own — UpsertState's documented asymmetry). */
-  def q74StreamCdc(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q74_").toFile
-    try {
+  def q74StreamCdc(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q74_") { tmp =>
       val state = new java.io.File(tmp, "state").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       graft.streaming.EventStreams.cdcCompactStream(spark, dir, state, ckpt)
@@ -84,8 +83,7 @@ object ChangeData {
           col("cents").as("last_cents"))
       // one row per user: materialize so the temp state/checkpoint can drop
       graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained state ≡ batch compaction: the gate q56 already passes. */
   val q74Sql: String = q56Sql
@@ -100,9 +98,8 @@ object ChangeData {
     * oracle. q74 gates the same algebra fed by a parquet file stream;
     * this gates the landing-dir service shape — with q96 it completes
     * BOTH maintenance algebras in both ingest forms. */
-  def q98StreamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q98_").toFile
-    try {
+  def q98StreamUpsert(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q98_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val state = new java.io.File(tmp, "state").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -117,8 +114,7 @@ object ChangeData {
           col("cents").as("last_cents"))
       // one row per user: materialize so the temp tree drops eagerly
       graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained state ≡ batch compaction: q56's oracle verbatim. */
   val q98Sql: String = q56Sql
@@ -552,9 +548,8 @@ object ChangeData {
     * algebra fed by a parquet file stream; this gates the JSON
     * landing-dir service shape (the reference's daily fetch loop as a
     * continuously-maintained rollup). */
-  def q96StreamRollup(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q96_").toFile
-    try {
+  def q96StreamRollup(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q96_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val rollup = new java.io.File(tmp, "rollup").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -568,8 +563,7 @@ object ChangeData {
           col("sum_cents"), col("max_cents"))
       // rollup-sized (types × days): materialize so the temp tree drops
       graft.util.Materialize.sorted(res, col("event_type"), col("d"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained-by-merge ≡ recompute: q63's oracle verbatim. */
   val q96Sql: String = q63Sql

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables._
+import graft.streaming.EventStreams
 
 /** Event-time queries over the `events` table (SURVEY.md §2.4 Q15–Q16 plus
   * the JSON-props battery). Batch formulations here are the scored,
@@ -237,20 +238,18 @@ object EventTime {
     * aggregation — the reference's `schedule="@daily"` loop (reference
     * dags/etl.py:12) restated as incremental view maintenance under the
     * DuckDB gate instead of only the StreamingSpec laws. */
-  def q70StreamTumbling(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q70_").toFile
-    try {
+  def q70StreamTumbling(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q70_") { tmp =>
       val state = new java.io.File(tmp, "state").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      graft.streaming.EventStreams.tumblingMaintainStream(spark, dir, state, ckpt)
+      EventStreams.tumblingMaintainStream(spark, dir, state, ckpt)
       val res = spark.read.parquet(state)
         .select(col("window_start"), col("event_type"), col("n"),
           col("sum_dec").cast(DoubleType).as("sum_value"))
       // materialize (hours × types rows) so the temp state/checkpoint tree
       // can be removed eagerly (q35's reasoning)
       graft.util.Materialize.sorted(res, col("window_start"), col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained-state ≡ batch: the gate q15 already passes. */
   val q70Sql: String = q15Sql
@@ -260,36 +259,31 @@ object EventTime {
   /** Q75 — the documents table streamed through the `graft-jsonl`
     * DataSource V2 STREAMING sink (per-epoch temp files, epoch commit log
     * → exactly-once publish; [[graft.sources.v2.JsonLinesSink]]) under
-    * `Trigger.AvailableNow`, read back through its scan, and rolled up
+    * the AvailableNow drain, read back through its scan, and rolled up
     * per (lang, source). The oracle aggregates the parquet table
     * directly — any row lost, duplicated, or mangled by the streaming
     * commit path flips the hash. Complements q70/q74 (which gate the
     * foreachBatch maintenance algebras): this gates the connector-level
     * epoch protocol itself. */
-  def q75StreamSink(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q75_").toFile
-    try {
+  def q75StreamSink(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q75_") { tmp =>
       val out = new java.io.File(tmp, "docs_jsonl").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val schema = spark.read
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .select("doc_id", "text", "lang", "source", "n_chars").schema
-      val q = spark.readStream.schema(schema)
+      EventStreams.drain(spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .writeStream.format("graft-jsonl")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("path", out)
+        .outputMode("append"), ckpt)
       val res = spark.read.format("graft-jsonl").schema(schema).load(out)
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       // materialize (langs × sources rows) so the temp tree drops eagerly
       graft.util.Materialize.sorted(res, col("lang"), col("source"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q75Sql: String =
     """SELECT lang, source, count(*) AS n_docs,
@@ -309,30 +303,27 @@ object EventTime {
     * hash (on a bounded input every pair must be emitted; StreamingSpec
     * asserts row-set equality with the static join, this adds the
     * cross-engine hash). */
-  def q80StreamPairs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q80_").toFile
-    // the join state is tiny (pairs within 10 min of one user) but every
-    // shuffle partition carries TWO state stores with per-batch commit
-    // overhead — size the stream's partitioning to the state, not the
-    // session default (a stream pins its partitioning at checkpoint
-    // creation, so this is also the knob a real deployment sets)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val out = new java.io.File(tmp, "pairs").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val q = graft.streaming.EventStreams
-        .pairWithin(graft.streaming.EventStreams.readEvents(spark, dir))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("sum_gap_us"))
-      // one row per user: materialize so the temp sink/checkpoint can drop
-      graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q80StreamPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q80_") { tmp =>
+      // the join state is tiny (pairs within 10 min of one user) but every
+      // shuffle partition carries TWO state stores with per-batch commit
+      // overhead — size the stream's partitioning to the state, not the
+      // session default (a stream pins its partitioning at checkpoint
+      // creation, so this is also the knob a real deployment sets)
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val out = new java.io.File(tmp, "pairs").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        EventStreams.drain(EventStreams
+          .pairWithin(EventStreams.readEvents(spark, dir))
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("sum_gap_us"))
+        // one row per user: materialize so the temp sink/checkpoint can drop
+        graft.util.Materialize.sorted(res, col("user_id"))
+      }
+    }
 
   val q80Sql: String =
     """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
@@ -356,9 +347,8 @@ object EventTime {
     * dropped, duplicated, or mis-enriched flips the hash. Fifth streaming
     * surface under the hard oracle (q70 partial-agg merge, q74 upsert,
     * q75 sink epochs, x79 shard deal, and now the enrich-append). */
-  def q76StreamAsof(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q76_").toFile
-    try {
+  def q76StreamAsof(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q76_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val ordersPath = new java.io.File(tmp, "orders").getAbsolutePath
       val out = new java.io.File(tmp, "out").getAbsolutePath
@@ -369,13 +359,12 @@ object EventTime {
       t(spark, dir, "events")
         .selectExpr("user_id", "unix_micros(ts) AS ts_us", "event_id")
         .coalesce(1).write.json(landing)
-      graft.streaming.EventStreams.asofEnrichStream(spark, landing, ordersPath, out, ckpt)
+      EventStreams.asofEnrichStream(spark, landing, ordersPath, out, ckpt)
       val res = spark.read.parquet(out)
       // materialize (bounded by the landed event table, q57's output size)
       // so the temp orders/checkpoint tree can drop eagerly
       graft.util.Materialize.sorted(res, col("event_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Per-event as-of in micros — q19's semantics on the stream's output
     * schema (events with no prior order are absent, as in q19's inner
@@ -407,35 +396,32 @@ object EventTime {
     * scored per session. q34 proved built-in ≡ manual lag+cumsum in
     * batch; this puts the streaming state machine itself (merge, emit,
     * expire) under the same DuckDB hash. */
-  def q88StreamSession(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q88_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val out = new java.io.File(tmp, "sessions").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
-        lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000))
-          .as("ts"))
-      ev.unionByName(sentinel).write.parquet(landing)
-      val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val q = graft.streaming.EventStreams.sessionAgg(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .filter(col("user_id") >= 0) // the sentinel's own session is scaffolding
-        .select(col("user_id"),
-          col("session_start").cast("timestamp_ntz").as("session_start"),
-          col("session_end").cast("timestamp_ntz").as("session_end"),
-          col("n_events"))
-      // session-count-sized: materialize so the temp tree drops eagerly
-      graft.util.Materialize.sorted(res, col("user_id"), col("session_start"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q88StreamSession(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q88_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val out = new java.io.File(tmp, "sessions").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
+        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+        val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
+          lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000))
+            .as("ts"))
+        ev.unionByName(sentinel).write.parquet(landing)
+        val stream = spark.readStream.schema(ev.schema).parquet(landing)
+        EventStreams.drain(EventStreams.sessionAgg(stream)
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .filter(col("user_id") >= 0) // the sentinel's own session is scaffolding
+          .select(col("user_id"),
+            col("session_start").cast("timestamp_ntz").as("session_start"),
+            col("session_end").cast("timestamp_ntz").as("session_end"),
+            col("n_events"))
+        // session-count-sized: materialize so the temp tree drops eagerly
+        graft.util.Materialize.sorted(res, col("user_id"), col("session_start"))
+      }
+    }
 
   /** Streamed sessions ≡ batch sessions: q34's oracle verbatim. */
   val q88Sql: String = q34Sql
@@ -450,34 +436,31 @@ object EventTime {
     * windows multiply OPEN STATE by size/slide (4× here) but not by
     * input volume — the watermark bound q23's docstring claims, now
     * hash-verified through the streaming path. */
-  def q90StreamSliding(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q90_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val out = new java.io.File(tmp, "windows").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events")
-        .select(col("ts"), col("event_type"), col("value"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      val sentinel = spark.range(1).select(
-        lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"),
-        lit("__flush").as("event_type"), lit(0.0).as("value"))
-      ev.unionByName(sentinel).write.parquet(landing)
-      val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val q = graft.streaming.EventStreams.slidingAgg(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .filter(col("event_type") =!= "__flush")
-        .select(col("window_start").cast("timestamp_ntz").as("window_start"),
-          col("event_type"), col("n"), col("sum_value"))
-      // (hours×4 slides × types) rows: materialize so the temp tree drops
-      graft.util.Materialize.sorted(res, col("window_start"), col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q90StreamSliding(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q90_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val out = new java.io.File(tmp, "windows").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events")
+          .select(col("ts"), col("event_type"), col("value"))
+        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+        val sentinel = spark.range(1).select(
+          lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"),
+          lit("__flush").as("event_type"), lit(0.0).as("value"))
+        ev.unionByName(sentinel).write.parquet(landing)
+        val stream = spark.readStream.schema(ev.schema).parquet(landing)
+        EventStreams.drain(EventStreams.slidingAgg(stream)
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .filter(col("event_type") =!= "__flush")
+          .select(col("window_start").cast("timestamp_ntz").as("window_start"),
+            col("event_type"), col("n"), col("sum_value"))
+        // (hours×4 slides × types) rows: materialize so the temp tree drops
+        graft.util.Materialize.sorted(res, col("window_start"), col("event_type"))
+      }
+    }
 
   /** Streamed sliding windows ≡ batch: q23's oracle verbatim. */
   val q90Sql: String = q23Sql
@@ -498,27 +481,27 @@ object EventTime {
     * under the hard gate: windowed aggs, session_window, stream-stream /
     * stream-static joins, dropDuplicatesWithinWatermark, foreachBatch
     * maintenance, and now (flat)MapGroupsWithState. */
-  def q97StreamStateful(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q97_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      val sentinels = ev.select(col("user_id")).distinct()
-        .withColumn("ts",
-          lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)))
-      ev.unionByName(sentinels).write.parquet(landing)
-      val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val sessions = graft.streaming.EventStreams
-        .sessionizeStatefulOn(spark, stream, "graft_q97_sessions")
-      val res = sessions
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(col("n_events")).as("n_events"))
-      // one row per user: materialize so the temp landing drops eagerly
-      graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q97StreamStateful(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q97_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
+        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+        val sentinels = ev.select(col("user_id")).distinct()
+          .withColumn("ts",
+            lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)))
+        ev.unionByName(sentinels).write.parquet(landing)
+        val stream = spark.readStream.schema(ev.schema).parquet(landing)
+        val sessions = EventStreams
+          .sessionizeStatefulOn(spark, stream, "graft_q97_sessions")
+        val res = sessions
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_sessions"),
+            sum(col("n_events")).as("n_events"))
+        // one row per user: materialize so the temp landing drops eagerly
+        graft.util.Materialize.sorted(res, col("user_id"))
+      }
+    }
 
   /** Closed sessions ≡ batch sessionization: q16's oracle verbatim. */
   val q97Sql: String = q16Sql
@@ -567,30 +550,27 @@ object EventTime {
     * costs nothing to keep running forever. Completes the streaming join
     * family under the hard gate: stream-stream inner (q80), stream-static
     * as-of enrich (q76), and now the suppression/anti shape. */
-  def q93StreamAnti(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q93_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val out = new java.io.File(tmp, "kept").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val block = t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey").as("user_id")).distinct()
-      val q = graft.streaming.EventStreams.readEvents(spark, dir)
-        .join(block, Seq("user_id"), "left_anti")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("user_id")).as("n_users"),
-          sumMoney2(col("value")).as("sum_value"))
-      // one row per event type: materialize so the temp tree drops
-      graft.util.Materialize.sorted(res, col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q93StreamAnti(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q93_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val out = new java.io.File(tmp, "kept").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val block = t(spark, dir, "orders")
+          .filter(col("o_orderpriority") === "1-URGENT")
+          .select(col("o_custkey").as("user_id")).distinct()
+        EventStreams.drain(EventStreams.readEvents(spark, dir)
+          .join(block, Seq("user_id"), "left_anti")
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            countDistinct(col("user_id")).as("n_users"),
+            sumMoney2(col("value")).as("sum_value"))
+        // one row per event type: materialize so the temp tree drops
+        graft.util.Materialize.sorted(res, col("event_type"))
+      }
+    }
 
   val q93Sql: String =
     """SELECT event_type, count(*) AS n,
@@ -627,31 +607,28 @@ object EventTime {
     * aggregation, q74 stateful upsert, q80 the stream-stream join, q83
     * the streaming dedup operator — the unbounded-stream form of the
     * reference's `ON CONFLICT DO NOTHING` (reference dags/etl.py:74). */
-  def q83StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q83_").toFile
-    // one small state store per shuffle partition: size the stream's
-    // partitioning to the state volume (q80's reasoning), not the default
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val out = new java.io.File(tmp, "deduped").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val once = graft.streaming.EventStreams.readEvents(spark, dir)
-      val twice = once.union(graft.streaming.EventStreams.readEvents(spark, dir))
-      val q = graft.streaming.EventStreams.dedupStream(twice)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("event_id")).as("n_ids"),
-          sumMoney2(col("value")).as("sum_value"))
-      // one row per event type: materialize so the temp sink/checkpoint
-      // tree can drop eagerly
-      graft.util.Materialize.sorted(res, col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q83StreamDedup(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q83_") { tmp =>
+      // one small state store per shuffle partition: size the stream's
+      // partitioning to the state volume (q80's reasoning), not the default
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val out = new java.io.File(tmp, "deduped").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val once = EventStreams.readEvents(spark, dir)
+        val twice = once.union(EventStreams.readEvents(spark, dir))
+        EventStreams.drain(EventStreams.dedupStream(twice)
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            countDistinct(col("event_id")).as("n_ids"),
+            sumMoney2(col("value")).as("sum_value"))
+        // one row per event type: materialize so the temp sink/checkpoint
+        // tree can drop eagerly
+        graft.util.Materialize.sorted(res, col("event_type"))
+      }
+    }
 
   /** Single-delivery rollup — n must equal n_ids (every duplicate gone). */
   val q83Sql: String =
@@ -688,35 +665,31 @@ object EventTime {
     * run; the one requirement, as with q80/q83, is sizing
     * `spark.sql.shuffle.partitions` to the state volume because each
     * shuffle partition is its own store. */
-  def q102StateInspect(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q102_").toFile
-    // partitions ∝ state volume (the sizing rule this gate documents,
-    // executable — [[graft.util.Confs.stateSizedPartitions]]); the sink is
-    // noop: nothing ever reads the deduped rows — the gate's answer comes
-    // from the CHECKPOINT, and serializing discarded output to parquet was
-    // pure sink cost (guide §1.4 applied to the operator itself, r11)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val q = graft.streaming.EventStreams
-        .dedupStream(graft.streaming.EventStreams.readEvents(spark, dir),
-          watermark = "3650 days") // >> data span: nothing evicts, state is exact
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val stateKeys = spark.read.format("statestore").load(ckpt)
-        .select(col("key.event_id").as("event_id"))
-      val res = t(spark, dir, "events")
-        .join(stateKeys, Seq("event_id"), "left_semi")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_keys"))
-      val rows = res.collectAsList()
-      require(!rows.isEmpty, "q102: the state store must hold keys")
-      spark.createDataFrame(rows, res.schema).orderBy(col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q102StateInspect(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q102_") { tmp =>
+      // partitions ∝ state volume (the sizing rule this gate documents,
+      // executable — [[graft.util.Confs.stateSizedPartitions]]); the sink is
+      // noop: nothing ever reads the deduped rows — the gate's answer comes
+      // from the CHECKPOINT, and serializing discarded output to parquet was
+      // pure sink cost (guide §1.4 applied to the operator itself, r11)
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
+        graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        EventStreams.drain(EventStreams
+          .dedupStream(EventStreams.readEvents(spark, dir),
+            watermark = "3650 days") // >> data span: nothing evicts, state is exact
+          .writeStream.outputMode("append").format("noop"), ckpt)
+        val stateKeys = spark.read.format("statestore").load(ckpt)
+          .select(col("key.event_id").as("event_id"))
+        val res = t(spark, dir, "events")
+          .join(stateKeys, Seq("event_id"), "left_semi")
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_keys"))
+        val rows = res.collectAsList()
+        require(!rows.isEmpty, "q102: the state store must hold keys")
+        spark.createDataFrame(rows, res.schema).orderBy(col("event_type"))
+      }
+    }
 
   /** With no eviction the store holds every distinct id once — the key
     * census per type is the base table's distinct-id count. */
@@ -736,32 +709,28 @@ object EventTime {
     * reads state (rate × window per side), never stream history, and is
     * exactly how an operator confirms which side's buffer a skewed user
     * is inflating. */
-  def q118JoinState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q118_").toFile
-    // partitions ∝ state volume + noop sink (output discarded; the gate's
-    // answer is the checkpoint census) — see q102, same r11 reasoning
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val q = graft.streaming.EventStreams
-        .pairWithin(graft.streaming.EventStreams.readEvents(spark, dir),
-          watermark = "3650 days") // >> data span: nothing evicts, state is exact
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      def census(side: String, as: String, userCol: String) =
-        spark.read.format("statestore").option("joinSide", side).load(ckpt)
-          .groupBy(col(s"value.$userCol").as("user_id"))
-          .agg(count(lit(1)).as(as))
-      val res = census("left", "n_left", "user_id")
-        .join(census("right", "n_right", "b_user"), Seq("user_id"))
-      val rows = res.collectAsList()
-      require(!rows.isEmpty, "q118: the join state stores must hold rows")
-      spark.createDataFrame(rows, res.schema).orderBy(col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q118JoinState(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q118_") { tmp =>
+      // partitions ∝ state volume + noop sink (output discarded; the gate's
+      // answer is the checkpoint census) — see q102, same r11 reasoning
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
+        graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        EventStreams.drain(EventStreams
+          .pairWithin(EventStreams.readEvents(spark, dir),
+            watermark = "3650 days") // >> data span: nothing evicts, state is exact
+          .writeStream.outputMode("append").format("noop"), ckpt)
+        def census(side: String, as: String, userCol: String) =
+          spark.read.format("statestore").option("joinSide", side).load(ckpt)
+            .groupBy(col(s"value.$userCol").as("user_id"))
+            .agg(count(lit(1)).as(as))
+        val res = census("left", "n_left", "user_id")
+          .join(census("right", "n_right", "b_user"), Seq("user_id"))
+        val rows = res.collectAsList()
+        require(!rows.isEmpty, "q118: the join state stores must hold rows")
+        spark.createDataFrame(rows, res.schema).orderBy(col("user_id"))
+      }
+    }
 
   /** No eviction → each side buffered every input row once. */
   val q118Sql: String =
@@ -779,36 +748,32 @@ object EventTime {
     * pipeline wants, read from the checkpoint at state cost — and it
     * doubles as a law that incremental gap-merge state equals the
     * one-shot computation. */
-  def q119SessionState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q119_").toFile
-    // partitions ∝ state volume + noop sink (append mode emits nothing
-    // here by design; the gate's answer is the open-session state) — see
-    // q102, same r11 reasoning
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
-      ev.write.parquet(landing)
-      val stream = spark.readStream.schema(ev.schema).parquet(landing)
-      val q = graft.streaming.EventStreams
-        .sessionAgg(stream, watermark = "3650 days") // nothing closes: state = answer
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.format("statestore").load(ckpt)
-        .select(col("value.user_id").as("user_id"),
-          col("value.session_window.start").cast("timestamp_ntz").as("session_start"),
-          col("value.session_window.end").cast("timestamp_ntz").as("session_end"),
-          col("value.count").as("n_events"))
-      val rows = res.collectAsList()
-      require(!rows.isEmpty, "q119: the session store must hold open sessions")
-      spark.createDataFrame(rows, res.schema)
-        .orderBy(col("user_id"), col("session_start"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q119SessionState(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q119_") { tmp =>
+      // partitions ∝ state volume + noop sink (append mode emits nothing
+      // here by design; the gate's answer is the open-session state) — see
+      // q102, same r11 reasoning
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
+        graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
+        ev.write.parquet(landing)
+        val stream = spark.readStream.schema(ev.schema).parquet(landing)
+        EventStreams.drain(EventStreams
+          .sessionAgg(stream, watermark = "3650 days") // nothing closes: state = answer
+          .writeStream.outputMode("append").format("noop"), ckpt)
+        val res = spark.read.format("statestore").load(ckpt)
+          .select(col("value.user_id").as("user_id"),
+            col("value.session_window.start").cast("timestamp_ntz").as("session_start"),
+            col("value.session_window.end").cast("timestamp_ntz").as("session_end"),
+            col("value.count").as("n_events"))
+        val rows = res.collectAsList()
+        require(!rows.isEmpty, "q119: the session store must hold open sessions")
+        spark.createDataFrame(rows, res.schema)
+          .orderBy(col("user_id"), col("session_start"))
+      }
+    }
 
   /** Open merged sessions ≡ batch sessions: q34's oracle verbatim. */
   val q119Sql: String = q34Sql
@@ -833,46 +798,42 @@ object EventTime {
     * state (keys × partitions), never stream history, and the oracle
     * relation is what makes the audit's answer CHECKABLE rather than
     * trusted. */
-  def q123EvictingState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q123_").toFile
-    // partitions ∝ state volume — q102's sizing rule, executable (r11)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events").select(col("event_id"), col("ts"))
-        .localCheckpoint(true) // read by both landing writes + the census join
-      val cutTs = lit("2024-01-21").cast(TimestampType)
-      ev.filter(col("ts") < cutTs).coalesce(1).write.json(landing)
-      ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").json(landing)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType)))
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(landing)
-        .withWatermark("ts", "7 days") // << data span: eviction is REAL
-        .dropDuplicates("event_id", "ts")
-        // noop sink: the deduped rows are never read — the gate's answer
-        // is the checkpoint state (q102's r11 reasoning)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val stateKeys = spark.read.format("statestore").load(ckpt)
-        .select(col("key.event_id").as("event_id"))
-      val res = t(spark, dir, "events")
-        .join(stateKeys, Seq("event_id"), "left_semi")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_keys"))
-      val rows = res.collectAsList()
-      require(!rows.isEmpty, "q123: the state store must hold retained keys")
-      var retained = 0L
-      rows.forEach(r => retained += r.getLong(1))
-      require(retained < t(spark, dir, "events").count(),
-        s"q123: the watermark must have evicted (state holds $retained keys)")
-      spark.createDataFrame(rows, res.schema).orderBy(col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q123EvictingState(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q123_") { tmp =>
+      // partitions ∝ state volume — q102's sizing rule, executable (r11)
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
+        graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events").select(col("event_id"), col("ts"))
+          .localCheckpoint(true) // read by both landing writes + the census join
+        val cutTs = lit("2024-01-21").cast(TimestampType)
+        ev.filter(col("ts") < cutTs).coalesce(1).write.json(landing)
+        ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").json(landing)
+        val schema = StructType(Seq(
+          StructField("event_id", LongType), StructField("ts", TimestampType)))
+        EventStreams.drain(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").json(landing)
+          .withWatermark("ts", "7 days") // << data span: eviction is REAL
+          .dropDuplicates("event_id", "ts")
+          // noop sink: the deduped rows are never read — the gate's answer
+          // is the checkpoint state (q102's r11 reasoning)
+          .writeStream.outputMode("append").format("noop"), ckpt)
+        val stateKeys = spark.read.format("statestore").load(ckpt)
+          .select(col("key.event_id").as("event_id"))
+        val res = t(spark, dir, "events")
+          .join(stateKeys, Seq("event_id"), "left_semi")
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_keys"))
+        val rows = res.collectAsList()
+        require(!rows.isEmpty, "q123: the state store must hold retained keys")
+        var retained = 0L
+        rows.forEach(r => retained += r.getLong(1))
+        require(retained < t(spark, dir, "events").count(),
+          s"q123: the watermark must have evicted (state holds $retained keys)")
+        spark.createDataFrame(rows, res.schema).orderBy(col("event_type"))
+      }
+    }
 
   /** The watermark-retained suffix, per type: keys with ts within the
     * final watermark's delay of the stream's max event time. */
@@ -902,43 +863,40 @@ object EventTime {
     * complement emitted to the sink, state stays (rate × gap)-bounded
     * however long the stream runs, and the audit's answer is still
     * checkable against the base table. */
-  def q125EvictingSessions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q125_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val out = new java.io.File(tmp, "closed").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
-        .localCheckpoint(true)
-      // parquet landing, not JSON: the JSON writer is millisecond-precision
-      // and the session ends must stay microsecond-exact vs the oracle
-      val cutTs = lit("2024-01-21").cast(TimestampType)
-      ev.filter(col("ts") < cutTs).coalesce(1).write.parquet(landing)
-      ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").parquet(landing)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
-      val q = graft.streaming.EventStreams
-        .sessionAgg(stream, watermark = "7 days") // << data span: sessions CLOSE
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val open = spark.read.format("statestore").load(ckpt)
-        .select(col("value.user_id").as("user_id"),
-          col("value.session_window.start").cast("timestamp_ntz").as("session_start"),
-          col("value.session_window.end").cast("timestamp_ntz").as("session_end"),
-          col("value.count").as("n_events"))
-      val rows = open.collectAsList()
-      require(!rows.isEmpty, "q125: the session store must hold open sessions")
-      val closed = spark.read.parquet(out).count()
-      require(closed > 0 && closed > rows.size(),
-        s"q125: the watermark must have closed most sessions " +
-          s"(closed=$closed, open=${rows.size()})")
-      spark.createDataFrame(rows, open.schema)
-        .orderBy(col("user_id"), col("session_start"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q125EvictingSessions(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q125_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val out = new java.io.File(tmp, "closed").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events").select(col("user_id"), col("ts"))
+          .localCheckpoint(true)
+        // parquet landing, not JSON: the JSON writer is millisecond-precision
+        // and the session ends must stay microsecond-exact vs the oracle
+        val cutTs = lit("2024-01-21").cast(TimestampType)
+        ev.filter(col("ts") < cutTs).coalesce(1).write.parquet(landing)
+        ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").parquet(landing)
+        val stream = spark.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(landing)
+        EventStreams.drain(EventStreams
+          .sessionAgg(stream, watermark = "7 days") // << data span: sessions CLOSE
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val open = spark.read.format("statestore").load(ckpt)
+          .select(col("value.user_id").as("user_id"),
+            col("value.session_window.start").cast("timestamp_ntz").as("session_start"),
+            col("value.session_window.end").cast("timestamp_ntz").as("session_end"),
+            col("value.count").as("n_events"))
+        val rows = open.collectAsList()
+        require(!rows.isEmpty, "q125: the session store must hold open sessions")
+        val closed = spark.read.parquet(out).count()
+        require(closed > 0 && closed > rows.size(),
+          s"q125: the watermark must have closed most sessions " +
+            s"(closed=$closed, open=${rows.size()})")
+        spark.createDataFrame(rows, open.schema)
+          .orderBy(col("user_id"), col("session_start"))
+      }
+    }
 
   /** Q126 — STREAM-STREAM JOIN STATE UNDER REAL EVICTION, scored: q118's
     * two-store census with a watermark that genuinely evicts, completing
@@ -958,49 +916,45 @@ object EventTime {
     * from the base table. Operationally: the "why is my join state
     * growing?" audit of q118 now runs on a stream where state is
     * watermark-BOUNDED — and the answer is still checkable. */
-  def q126EvictingJoinState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q126_").toFile
-    // partitions ∝ state volume — q102's sizing rule, executable (r11)
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
-      graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts")).localCheckpoint(true)
-      // parquet landing (µs-exact), time-split so batch 2 sits far above
-      // its working watermark — nothing drops late (the q125 argument)
-      val cutTs = lit("2024-01-21").cast(TimestampType)
-      ev.filter(col("ts") < cutTs).coalesce(1).write.parquet(landing)
-      ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").parquet(landing)
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
-      val q = graft.streaming.EventStreams
-        .pairWithin(stream, windowMinutes = 10, watermark = "7 days") // evicts
-        // noop sink: the pairs are never read — the gate's answer is the
-        // checkpoint census (q102's r11 reasoning)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      def census(side: String, as: String, userCol: String) =
-        spark.read.format("statestore").option("joinSide", side).load(ckpt)
-          .groupBy(col(s"value.$userCol").as("user_id"))
-          .agg(count(lit(1)).as(as))
-      // users(right) ⊆ users(left): the left cutoff is 10 minutes lower
-      val res = census("left", "n_left", "user_id")
-        .join(census("right", "n_right", "b_user"), Seq("user_id"), "left")
-        .select(col("user_id"), col("n_left"),
-          coalesce(col("n_right"), lit(0L)).as("n_right"))
-      val rows = res.collectAsList()
-      require(!rows.isEmpty, "q126: the join state stores must hold rows")
-      var buffered = 0L
-      rows.forEach(r => buffered += r.getLong(1))
-      require(buffered < ev.count(),
-        s"q126: the watermark must have evicted (left holds $buffered rows)")
-      spark.createDataFrame(rows, res.schema).orderBy(col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q126EvictingJoinState(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q126_") { tmp =>
+      // partitions ∝ state volume — q102's sizing rule, executable (r11)
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" ->
+        graft.util.Confs.stateSizedPartitions(spark, s"$dir/events.parquet").toString) {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events")
+          .select(col("user_id"), col("event_id"), col("ts")).localCheckpoint(true)
+        // parquet landing (µs-exact), time-split so batch 2 sits far above
+        // its working watermark — nothing drops late (the q125 argument)
+        val cutTs = lit("2024-01-21").cast(TimestampType)
+        ev.filter(col("ts") < cutTs).coalesce(1).write.parquet(landing)
+        ev.filter(col("ts") >= cutTs).coalesce(1).write.mode("append").parquet(landing)
+        val stream = spark.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(landing)
+        EventStreams.drain(EventStreams
+          .pairWithin(stream, windowMinutes = 10, watermark = "7 days") // evicts
+          // noop sink: the pairs are never read — the gate's answer is the
+          // checkpoint census (q102's r11 reasoning)
+          .writeStream.outputMode("append").format("noop"), ckpt)
+        def census(side: String, as: String, userCol: String) =
+          spark.read.format("statestore").option("joinSide", side).load(ckpt)
+            .groupBy(col(s"value.$userCol").as("user_id"))
+            .agg(count(lit(1)).as(as))
+        // users(right) ⊆ users(left): the left cutoff is 10 minutes lower
+        val res = census("left", "n_left", "user_id")
+          .join(census("right", "n_right", "b_user"), Seq("user_id"), "left")
+          .select(col("user_id"), col("n_left"),
+            coalesce(col("n_right"), lit(0L)).as("n_right"))
+        val rows = res.collectAsList()
+        require(!rows.isEmpty, "q126: the join state stores must hold rows")
+        var buffered = 0L
+        rows.forEach(r => buffered += r.getLong(1))
+        require(buffered < ev.count(),
+          s"q126: the watermark must have evicted (left holds $buffered rows)")
+        spark.createDataFrame(rows, res.schema).orderBy(col("user_id"))
+      }
+    }
 
   /** Per-user retained suffixes: left down to wm − 10min, right to wm. */
   val q126Sql: String =
@@ -1049,36 +1003,33 @@ object EventTime {
     * (rate × window per side); the outer form adds only the emission
     * delay — results trail by the watermark, the price of proving a
     * negative on an unbounded stream. */
-  def q122StreamOuter(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q122_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val out = new java.io.File(tmp, "pairs").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
-        lit(-1L).as("event_id"),
-        lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"))
-      ev.unionByName(sentinel).write.parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema).parquet(landing)
-      val q = graft.streaming.EventStreams.pairWithinOuter(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .filter(col("user_id") >= 0) // the sentinel's row is scaffolding
-        .groupBy(col("user_id"))
-        .agg(count(col("b_id")).as("n_paired"),
-             sum(when(col("b_id").isNull, 1L).otherwise(0L)).as("n_lonely"),
-             sum(col("gap_us")).as("sum_gap_us"))
-      graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q122StreamOuter(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q122_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val out = new java.io.File(tmp, "pairs").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events")
+          .select(col("user_id"), col("event_id"), col("ts"))
+        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+        val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
+          lit(-1L).as("event_id"),
+          lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"))
+        ev.unionByName(sentinel).write.parquet(landing)
+        val stream = spark.readStream
+          .schema(spark.read.parquet(landing).schema).parquet(landing)
+        EventStreams.drain(EventStreams.pairWithinOuter(stream)
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .filter(col("user_id") >= 0) // the sentinel's row is scaffolding
+          .groupBy(col("user_id"))
+          .agg(count(col("b_id")).as("n_paired"),
+               sum(when(col("b_id").isNull, 1L).otherwise(0L)).as("n_lonely"),
+               sum(col("gap_us")).as("sum_gap_us"))
+        graft.util.Materialize.sorted(res, col("user_id"))
+      }
+    }
 
   /** Q127 — STREAM-STREAM FULL OUTER JOIN, scored: completes the
     * stream-stream join matrix (inner q80, left q122, full q127). Both
@@ -1090,39 +1041,36 @@ object EventTime {
     * paired / left-lonely / right-lonely rows hash-matches DuckDB's FULL
     * JOIN recompute. At 100 TB: state = rate × window per side, the
     * full form only adds the both-sides emission delay. */
-  def q127StreamFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q127_").toFile
-    try graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-      val landing = new java.io.File(tmp, "landing").getAbsolutePath
-      val out = new java.io.File(tmp, "pairs").getAbsolutePath
-      val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
-      val ev = t(spark, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
-        lit(-1L).as("event_id"),
-        lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"))
-      ev.unionByName(sentinel).write.parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema).parquet(landing)
-      val q = graft.streaming.EventStreams.pairWithinFull(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = spark.read.parquet(out)
-        .filter(col("user_id") >= 0) // the sentinel's rows are scaffolding
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("a_id").isNotNull && col("b_id").isNotNull, 1L)
-               .otherwise(0L)).as("n_paired"),
-             sum(when(col("a_id").isNotNull && col("b_id").isNull, 1L)
-               .otherwise(0L)).as("n_lonely_left"),
-             sum(when(col("a_id").isNull, 1L).otherwise(0L)).as("n_lonely_right"),
-             sum(col("gap_us")).as("sum_gap_us"))
-      graft.util.Materialize.sorted(res, col("user_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+  def q127StreamFullOuter(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q127_") { tmp =>
+      graft.util.Confs.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+        val landing = new java.io.File(tmp, "landing").getAbsolutePath
+        val out = new java.io.File(tmp, "pairs").getAbsolutePath
+        val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
+        val ev = t(spark, dir, "events")
+          .select(col("user_id"), col("event_id"), col("ts"))
+        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+        val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
+          lit(-1L).as("event_id"),
+          lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"))
+        ev.unionByName(sentinel).write.parquet(landing)
+        val stream = spark.readStream
+          .schema(spark.read.parquet(landing).schema).parquet(landing)
+        EventStreams.drain(EventStreams.pairWithinFull(stream)
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", out), ckpt)
+        val res = spark.read.parquet(out)
+          .filter(col("user_id") >= 0) // the sentinel's rows are scaffolding
+          .groupBy(col("user_id"))
+          .agg(sum(when(col("a_id").isNotNull && col("b_id").isNotNull, 1L)
+                 .otherwise(0L)).as("n_paired"),
+               sum(when(col("a_id").isNotNull && col("b_id").isNull, 1L)
+                 .otherwise(0L)).as("n_lonely_left"),
+               sum(when(col("a_id").isNull, 1L).otherwise(0L)).as("n_lonely_right"),
+               sum(col("gap_us")).as("sum_gap_us"))
+        graft.util.Materialize.sorted(res, col("user_id"))
+      }
+    }
 
   /** FULL JOIN recompute: both unmatched sides carry one null row each. */
   val q127Sql: String =

@@ -246,46 +246,38 @@ object Extended {
     * .outputOrdering` because it is unsound for multi-file buckets;
     * writeBucketed's single-file invariant is exactly what makes it
     * sound here (law in LayoutSpec). */
-  def q43BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q43_").toFile
-    val prevThreshold =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val orderingKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prevOrdering = spark.conf.getOption(orderingKey)
-    try {
-      TableLayout.writeBucketed(t(spark, dir, "orders"), "graft_q43_orders",
-        "o_custkey", 4, new java.io.File(tmp, "orders").getAbsolutePath)
-      TableLayout.writeBucketed(t(spark, dir, "customer"), "graft_q43_customer",
-        "c_custkey", 4, new java.io.File(tmp, "customer").getAbsolutePath)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(orderingKey, "true")
-      val joined = spark.table("graft_q43_orders")
-        .join(spark.table("graft_q43_customer"),
-          col("o_custkey") === col("c_custkey"))
-      val joinPlan = joined.queryExecution.executedPlan.toString
-      require(!joinPlan.contains("Exchange"),
-        "bucketed-bucketed join must be exchange-free")
-      require(!joinPlan.contains("Sort "),
-        s"single-file sorted buckets must make the merge join sort-free:\n$joinPlan")
-      val res = joined
-        .groupBy(col("c_mktsegment"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-             countDistinct(col("o_custkey")).as("n_customers"),
-             sumMoney2(col("o_totalprice")).as("revenue"))
-      // aggregate is segments × statuses rows — materialize so the temp
-      // catalog tables and files can be dropped eagerly (q35's reasoning)
-      graft.util.Materialize.sorted(res, col("c_mktsegment"), col("o_orderstatus"))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      prevOrdering match {
-        case Some(v) => spark.conf.set(orderingKey, v)
-        case None => spark.conf.unset(orderingKey)
+  def q43BucketedJoin(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q43_") { tmp =>
+      try {
+        TableLayout.writeBucketed(t(spark, dir, "orders"), "graft_q43_orders",
+          "o_custkey", 4, new java.io.File(tmp, "orders").getAbsolutePath)
+        TableLayout.writeBucketed(t(spark, dir, "customer"), "graft_q43_customer",
+          "c_custkey", 4, new java.io.File(tmp, "customer").getAbsolutePath)
+        graft.util.Confs.withConfs(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
+          val joined = spark.table("graft_q43_orders")
+            .join(spark.table("graft_q43_customer"),
+              col("o_custkey") === col("c_custkey"))
+          val joinPlan = joined.queryExecution.executedPlan.toString
+          require(!joinPlan.contains("Exchange"),
+            "bucketed-bucketed join must be exchange-free")
+          require(!joinPlan.contains("Sort "),
+            s"single-file sorted buckets must make the merge join sort-free:\n$joinPlan")
+          val res = joined
+            .groupBy(col("c_mktsegment"), col("o_orderstatus"))
+            .agg(count(lit(1)).as("n_orders"),
+                 countDistinct(col("o_custkey")).as("n_customers"),
+                 sumMoney2(col("o_totalprice")).as("revenue"))
+          // aggregate is segments × statuses rows — materialize so the temp
+          // catalog tables and files can be dropped eagerly (q35's reasoning)
+          graft.util.Materialize.sorted(res, col("c_mktsegment"), col("o_orderstatus"))
+        }
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS graft_q43_orders")
+        spark.sql("DROP TABLE IF EXISTS graft_q43_customer")
       }
-      spark.sql("DROP TABLE IF EXISTS graft_q43_orders")
-      spark.sql("DROP TABLE IF EXISTS graft_q43_customer")
-      graft.util.Fs.deleteTree(tmp)
     }
-  }
 
   val q43Sql: String =
     """SELECT c_mktsegment, o_orderstatus, count(*) AS n_orders,
@@ -305,9 +297,8 @@ object Extended {
     * require, the static-pruning counterpart of q35). At 100 TB this is
     * THE star-schema join shape: the fact scan is bounded by the dim
     * filter's selectivity without any static predicate on the fact. */
-  def q62Dpp(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q62_").toFile
-    try {
+  def q62Dpp(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q62_") { tmp =>
       val path = new java.io.File(tmp, "lineitem_by_month").getAbsolutePath
       TableLayout.writeLineitemByMonth(t(spark, dir, "lineitem"), path)
       val fact = TableLayout.read(spark, path)
@@ -324,8 +315,7 @@ object Extended {
         .agg(count(lit(1)).as("n_items"),
              sumMoney2(col("l_extendedprice")).as("revenue"))
       graft.util.Materialize.sorted(res, col("ship_month"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Q128 — runtime BLOOM-FILTER join pruning, scored: q62's discipline
     * for NON-partition keys. A selective dim predicate can prune a fact
@@ -376,17 +366,15 @@ object Extended {
       |  WHERE year(o_orderdate) = 1997 AND quarter(o_orderdate) = 2)
       |GROUP BY 1 ORDER BY ship_month""".stripMargin
 
-  def q35PartitionedScan(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q35_").toFile
-    try {
+  def q35PartitionedScan(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q35_") { tmp =>
       val path = new java.io.File(tmp, "events_by_day").getAbsolutePath
       TableLayout.writeEventsByDay(t(spark, dir, "events"), path)
       val res = prunedDayAgg(spark, path, "2024-01-15")
       // materialize the handful of aggregate rows so the temp tree can be
       // removed eagerly (same reasoning as Parity.p2DedupAppend)
       graft.util.Materialize.sorted(res, col("event_type"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q35Sql: String =
     """SELECT event_type, count(*) AS n_events,
@@ -669,9 +657,8 @@ object Extended {
     * the unused n_comment, the ORC scan must not read r_comment
     * (ReadSchema — the q4 pushdown discipline applied to the other
     * formats; FileSourcesSpec covers the pure read paths). */
-  def q71MultiFormat(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q71_").toFile
-    try {
+  def q71MultiFormat(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q71_") { tmp =>
       val csvPath = new java.io.File(tmp, "nation_csv").getAbsolutePath
       val orcPath = new java.io.File(tmp, "region_orc").getAbsolutePath
       val nationSchema = t(spark, dir, "nation").schema
@@ -693,8 +680,7 @@ object Extended {
              min(col("n_name")).as("first_nation"),
              sum(col("n_nationkey").cast(LongType)).as("key_sum"))
       graft.util.Materialize.sorted(res, col("r_name"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q71Sql: String =
     """SELECT r_name, count(*) AS n_nations, min(n_name) AS first_nation,
@@ -806,9 +792,8 @@ object Extended {
     * a non-rewrite trips the require. This is the transparent form of
     * q63's hand-maintained incremental rollup: at 100 TB the rewritten
     * scan reads |group domain| rows instead of the corpus. */
-  def q89MvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q89_").toFile
-    try {
+  def q89MvRewrite(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q89_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       buildLineitemMv(spark, dir, mvPath)
       registerLineitemMv(spark, dir, mvPath)
@@ -823,8 +808,7 @@ object Extended {
           s"q89 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q89Sql: String =
     """SELECT l_returnflag,
@@ -840,9 +824,8 @@ object Extended {
     * finer column would select within already-collapsed groups and must
     * block the rewrite (the refusal law in MvRewriteSpec). The oracle
     * filters + aggregates the base table in DuckDB. */
-  def q91MvFilter(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q91_").toFile
-    try {
+  def q91MvFilter(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q91_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       buildLineitemMv(spark, dir, mvPath)
       registerLineitemMv(spark, dir, mvPath)
@@ -858,8 +841,7 @@ object Extended {
           s"q91 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q91Sql: String =
     """SELECT l_linestatus,
@@ -883,20 +865,17 @@ object Extended {
     * composition a warehouse actually runs: STREAMS keep the view fresh,
     * the OPTIMIZER routes queries to it, and the DuckDB oracle (base-
     * table aggregation) catches any drift between the two. */
-  def q92StreamMv(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q92_").toFile
-    try {
+  def q92StreamMv(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q92_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val li = t(spark, dir, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
+      graft.streaming.EventStreams.drain(spark.readStream.schema(li.schema)
         .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           val partial = batch.toDF()
             .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -906,9 +885,7 @@ object Extended {
             _.groupBy(col("l_returnflag"), col("l_linestatus"))
               .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
                    sum(col("cnt")).as("cnt")))
-        }
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       registerLineitemMv(spark, dir, mvPath)
       try {
         val res = t(spark, dir, "lineitem").groupBy(col("l_returnflag"))
@@ -921,8 +898,7 @@ object Extended {
           s"q92 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained + rewritten ≡ one-shot over the base: q89's oracle. */
   val q92Sql: String = q89Sql
@@ -942,9 +918,8 @@ object Extended {
     * duplicated by a swap. At 100 TB the same loop runs per partition
     * with the swap a catalog pointer flip — compaction is what keeps the
     * scan unit at target file size forever. */
-  def q99Compaction(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q99_").toFile
-    try {
+  def q99Compaction(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q99_") { tmp =>
       val table = new java.io.File(tmp, "docs").getAbsolutePath
       val docs = t(spark, dir, "documents").select(col("doc_id"), col("source"), col("text"))
       (0 until 7).foreach { i =>
@@ -967,8 +942,7 @@ object Extended {
         "q99: transient compaction siblings must not survive the swap")
       val read = spark.read.parquet(table)
       graft.util.Materialize.sorted(read, col("doc_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** The maintained table is exactly the keyed corpus, once per key. */
   val q99Sql: String =
@@ -987,9 +961,8 @@ object Extended {
     * runs the same ROLLUP over the base in DuckDB. At 100 TB this is the
     * difference between replicating the corpus ×(levels+1) through the
     * Expand and replicating a few hundred MV rows. */
-  def q100MvRollup(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q100_").toFile
-    try {
+  def q100MvRollup(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q100_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       buildLineitemMv(spark, dir, mvPath)
       registerLineitemMv(spark, dir, mvPath)
@@ -1009,8 +982,7 @@ object Extended {
           s"q100's grouping-set replication must survive the rewrite:\n$plan")
         graft.util.Materialize.sorted(res, col("flag"), col("status"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q100Sql: String =
     """SELECT coalesce(l_returnflag, 'ALL') AS flag,
@@ -1034,9 +1006,8 @@ object Extended {
     * |flag×status| table where a |flag| table answers — here that is a
     * few rows, at scale it is the difference between a metadata read and
     * a real scan. */
-  def q101MvChoice(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q101_").toFile
-    try {
+  def q101MvChoice(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q101_") { tmp =>
       val fine = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       val coarse = new java.io.File(tmp, "lineitem_mv_flag").getAbsolutePath
       val li = t(spark, dir, "lineitem")
@@ -1064,8 +1035,7 @@ object Extended {
           s"q101 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Whichever view answers, the contract is the base aggregation. */
   val q101Sql: String = q89Sql
@@ -1086,9 +1056,8 @@ object Extended {
     * and two |grain|-row reads with them; per-subtree matching is what
     * makes the rewrite compose instead of bailing on the first
     * non-trivial plan. */
-  def q124MultiView(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q124_").toFile
-    try {
+  def q124MultiView(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q124_") { tmp =>
       val fine = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       val coarse = new java.io.File(tmp, "lineitem_mv_flag").getAbsolutePath
       val li = t(spark, dir, "lineitem")
@@ -1123,8 +1092,7 @@ object Extended {
           s"q124 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("flag"), col("status"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q124Sql: String =
     """WITH d AS (SELECT l_returnflag AS flag, l_linestatus AS status,
@@ -1148,9 +1116,8 @@ object Extended {
     * addition; regrouping a min still selects the same element). The
     * plan is require'd to scan only the MV; the oracle recomputes all
     * five aggregates from the base table in DuckDB. */
-  def q103MvMinmax(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q103_").toFile
-    try {
+  def q103MvMinmax(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q103_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv_stats").getAbsolutePath
       val li = t(spark, dir, "lineitem")
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -1183,8 +1150,7 @@ object Extended {
           s"q103 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q103Sql: String =
     """SELECT l_returnflag,
@@ -1215,9 +1181,8 @@ object Extended {
     * are corpus-bounded). At 100 TB this is the aggregate-navigator
     * answering the most common aggregate after sum/count from a
     * |group-domain|-row view instead of the corpus. */
-  def q104MvAvg(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q104_").toFile
-    try {
+  def q104MvAvg(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q104_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv_avg").getAbsolutePath
       val li = t(spark, dir, "lineitem")
       val priceDec = dec2(col("l_extendedprice"))
@@ -1252,8 +1217,7 @@ object Extended {
           s"q104 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   // ---- Q105: COUNT(DISTINCT grain column) from the MV, scored ------------
 
@@ -1268,9 +1232,8 @@ object Extended {
     * runs through the rewritten plan. At 100 TB: "how many distinct
     * sub-categories does each category have" answered from a
     * |grain|-row view instead of a corpus-wide distinct shuffle. */
-  def q105MvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q105_").toFile
-    try {
+  def q105MvDistinct(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q105_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       buildLineitemMv(spark, dir, mvPath)
       registerLineitemMv(spark, dir, mvPath)
@@ -1286,8 +1249,7 @@ object Extended {
           s"q105 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q105Sql: String =
     """SELECT l_returnflag,
@@ -1309,9 +1271,8 @@ object Extended {
     * to scan only the MV; the oracle computes the bucketing from base in
     * DuckDB. At 100 TB this is "monthly revenue answered from the daily
     * view" without re-scanning the corpus. */
-  def q106MvGroupExpr(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q106_").toFile
-    try {
+  def q106MvGroupExpr(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q106_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv").getAbsolutePath
       buildLineitemMv(spark, dir, mvPath)
       registerLineitemMv(spark, dir, mvPath)
@@ -1327,8 +1288,7 @@ object Extended {
           s"q106 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("flag_bucket"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q106Sql: String =
     """SELECT CASE WHEN l_returnflag = 'N' THEN 'open' ELSE 'closed' END AS flag_bucket,
@@ -1414,16 +1374,14 @@ object Extended {
     * shuffle in the warehouse, and the join MV pre-pays it ONCE at build
     * time — every matching query thereafter reads a |grain|-row view
     * instead of re-shuffling the corpus. */
-  def q107MvJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q107_").toFile
-    try {
+  def q107MvJoin(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q107_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_orders_mv").getAbsolutePath
       buildJoinMv(spark, dir, mvPath)
       registerJoinMv(spark, dir, mvPath)
       try joinMvQuery(spark, dir, "q107")
       finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q107Sql: String =
     """SELECT l_returnflag,
@@ -1475,9 +1433,8 @@ object Extended {
     * At 100 TB: filtered views are how a warehouse serves its hot
     * slices — "this quarter", "this tenant" — from a view of just those
     * rows, without trusting any predicate-implication prover. */
-  def q108MvFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q108_").toFile
-    try {
+  def q108MvFiltered(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q108_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv_disc").getAbsolutePath
       buildDiscountMv(spark, dir, mvPath)
       registerDiscountMv(spark, dir, mvPath)
@@ -1493,8 +1450,7 @@ object Extended {
           s"q108 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q108Sql: String =
     """SELECT l_linestatus,
@@ -1543,9 +1499,8 @@ object Extended {
     * month" hot slice without a view per range. The refusal laws
     * (overlapping-but-not-contained, different attribute, non-literal
     * bound, non-grain filtered column) live in MvRewriteSpec. */
-  def q114MvRange(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q114_").toFile
-    try {
+  def q114MvRange(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q114_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv_range").getAbsolutePath
       buildRangeMv(spark, dir, mvPath)
       registerRangeMv(spark, dir, mvPath)
@@ -1566,8 +1521,7 @@ object Extended {
           s"q114's residual range must push into the view scan:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q114Sql: String =
     """SELECT l_linestatus,
@@ -1620,10 +1574,8 @@ object Extended {
     * is exactly the 100 TB hot/cold shape: the archive aggregate is paid
     * once, each ingest batch reprices only its own groups, and dashboard
     * queries over archive ∪ this-quarter read |grain| rows. */
-  def q115UnionIvm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q115_").toFile
-    try {
+  def q115UnionIvm(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q115_") { tmp =>
       val coldPath = new java.io.File(tmp, "li_cold.parquet").getAbsolutePath
       val hotPath = new java.io.File(tmp, "li_hot.parquet").getAbsolutePath
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
@@ -1640,15 +1592,12 @@ object Extended {
           .agg(sum(qtyCents).as("sum_qty_cents"), count(lit(1)).as("cnt")),
         mvPath)(identity)
       val hotSchema = spark.read.parquet(landing).schema
-      val q = spark.readStream.schema(hotSchema)
+      graft.streaming.EventStreams.drain(spark.readStream.schema(hotSchema)
         .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           foldHotBatch(batch.toDF(), batchId, hotPath, mvPath, Some(ckpt))
-        }
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       graft.plans.MvCatalog.register(graft.plans.MvCatalog.MvDef(
         basePathSuffix = "li_cold.parquet", // unused: baseUnion matches
         groupCols = Set("l_returnflag", "l_linestatus"),
@@ -1675,8 +1624,7 @@ object Extended {
             s"q115 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** cold ∪ streamed hot = lineitem exactly once (disjoint split). */
   val q115Sql: String =
@@ -1701,10 +1649,8 @@ object Extended {
     * maintained view. At 100 TB this is the hot-slice view kept current
     * by ingest: each batch pays one filtered partial, the dashboard
     * reads |grain| rows. */
-  def q120FilteredIvm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q120_").toFile
-    try {
+  def q120FilteredIvm(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q120_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_mv_disc").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -1712,15 +1658,12 @@ object Extended {
         .select(col("l_returnflag"), col("l_linestatus"),
                 col("l_quantity"), col("l_discount"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
+      graft.streaming.EventStreams.drain(spark.readStream.schema(li.schema)
         .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           foldFilteredBatch(batch.toDF(), batchId, mvPath, Some(ckpt))
-        }
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       registerDiscountMv(spark, dir, mvPath)
       try {
         val res = t(spark, dir, "lineitem")
@@ -1734,8 +1677,7 @@ object Extended {
           s"q120 must not touch the base table:\n$plan")
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Fold one fact micro-batch into the FILTERED view's state: the baked
     * conjunct applies to the batch, the per-grain partial merges via the
@@ -1771,10 +1713,8 @@ object Extended {
     * maintenance matrix: every MV base kind — single (q92), inner star
     * (q109), filtered (q120), union (q115), outer (q121) — now has a
     * scored streamed-maintenance gate. */
-  def q121OuterIvm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q121_").toFile
-    try {
+  def q121OuterIvm(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q121_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val dimPath = new java.io.File(tmp, "orders_dim.parquet").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_outer_mv").getAbsolutePath
@@ -1786,10 +1726,9 @@ object Extended {
       val li = t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
+      graft.streaming.EventStreams.drain(spark.readStream.schema(li.schema)
         .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           val partial = batch.toDF()
             .join(batch.sparkSession.read.parquet(dimPath),
@@ -1801,9 +1740,7 @@ object Extended {
             _.groupBy(col("o_orderpriority"), col("l_returnflag"))
               .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
                    sum(col("cnt")).as("cnt")))
-        }
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       registerOuterMv(spark, dir, mvPath)
       try {
         val res = t(spark, dir, "lineitem")
@@ -1820,8 +1757,7 @@ object Extended {
             s"q121 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained ≡ one-shot outer-join aggregate: q116's oracle (lazy:
     * q116Sql is declared later in this file). */
@@ -1878,9 +1814,8 @@ object Extended {
     * from the bases (the pruned dim reproduced inline). Refusals (inner
     * query vs outer view and vice versa, dim-side filters, extra ON
     * conjuncts, non-unique registration) are MvRewriteSpec laws. */
-  def q116MvOuter(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q116_").toFile
-    try {
+  def q116MvOuter(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q116_") { tmp =>
       val dimPath = new java.io.File(tmp, "orders_dim.parquet").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_outer_mv").getAbsolutePath
       buildOuterMv(spark, dir, dimPath, mvPath)
@@ -1900,8 +1835,7 @@ object Extended {
             s"q116 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** The pruned dim is reproduced inline; the null group (unmatched
     * facts) must survive on both sides. */
@@ -1935,20 +1869,17 @@ object Extended {
     * production star-schema shape at 100 TB: facts stream in, the dim
     * join is paid once per delta (broadcast-sized dim), and every
     * matching query reads a |grain|-row view. */
-  def q109StreamJoinMv(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q109_").toFile
-    try {
+  def q109StreamJoinMv(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q109_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val mvPath = new java.io.File(tmp, "lineitem_orders_mv").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
       val li = t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       li.repartition(4).write.parquet(landing)
-      val q = spark.readStream.schema(li.schema)
+      graft.streaming.EventStreams.drain(spark.readStream.schema(li.schema)
         .option("maxFilesPerTrigger", "2").parquet(landing)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           val dim = t(batch.sparkSession, dir, "orders")
             .select(col("o_orderkey"), col("o_orderpriority"))
@@ -1961,14 +1892,11 @@ object Extended {
             _.groupBy(col("o_orderpriority"), col("l_returnflag"))
               .agg(sum(col("sum_qty_cents")).as("sum_qty_cents"),
                    sum(col("cnt")).as("cnt")))
-        }
-        .start()
-      q.awaitTermination()
+        }, ckpt)
       registerJoinMv(spark, dir, mvPath)
       try joinMvQuery(spark, dir, "q109")
       finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Maintained + rewritten ≡ one-shot over the bases: q107's oracle. */
   val q109Sql: String = q107Sql
@@ -1987,9 +1915,8 @@ object Extended {
     * schema: the view pre-pays BOTH dimension shuffles, and the flatten
     * makes the rewrite immune to join-order differences between the
     * view's definition and the user's query (or the CBO's reordering). */
-  def q110MvStar(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q110_").toFile
-    try {
+  def q110MvStar(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q110_") { tmp =>
       val mvPath = new java.io.File(tmp, "star_mv").getAbsolutePath
       val li = t(spark, dir, "lineitem")
       val ord = t(spark, dir, "orders")
@@ -2024,8 +1951,7 @@ object Extended {
             s"q110 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("o_orderpriority"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q110Sql: String =
     """SELECT o_orderpriority,
@@ -2093,9 +2019,8 @@ object Extended {
       mv = spark.read.parquet(mvPath).queryExecution.analyzed,
       baseUnion = Some(Seq("li_cold.parquet", "li_hot.parquet"))))
 
-  def q111MvUnion(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q111_").toFile
-    try {
+  def q111MvUnion(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q111_") { tmp =>
       val coldPath = new java.io.File(tmp, "li_cold.parquet").getAbsolutePath
       val hotPath = new java.io.File(tmp, "li_hot.parquet").getAbsolutePath
       val mvPath = new java.io.File(tmp, "union_mv").getAbsolutePath
@@ -2118,8 +2043,7 @@ object Extended {
             s"q111 must not touch the $b base table:\n$plan"))
         graft.util.Materialize.sorted(res, col("l_linestatus"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** cold ∪ hot = lineitem exactly once (disjoint split on l_orderkey). */
   val q111Sql: String =
@@ -2150,9 +2074,8 @@ object Extended {
     * ~1.6% standard error; the gate allows 5% + 2. At 100 TB:
     * count-distinct dashboards served from a |grain|-row view of
     * kilobyte sketches, never re-scanning the corpus. */
-  def q112MvSketch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q112_").toFile
-    try {
+  def q112MvSketch(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q112_") { tmp =>
       val mvPath = new java.io.File(tmp, "lineitem_mv_sk").getAbsolutePath
       val li = t(spark, dir, "lineitem")
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -2194,8 +2117,7 @@ object Extended {
               col("n_parts") * lit(0.05) + lit(2.0)).as("within_err"))
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.MvCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q112Sql: String =
     """SELECT l_returnflag,
@@ -2237,9 +2159,8 @@ object Extended {
     * columnar warehouse's covering index: the hot predicate path reads a
     * narrow sorted copy, not the 11-column ingest-ordered corpus. The
     * oracle aggregates the base table in DuckDB. */
-  def q113CoveringProj(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q113_").toFile
-    try {
+  def q113CoveringProj(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q113_") { tmp =>
       val projPath = new java.io.File(tmp, "lineitem_proj").getAbsolutePath
       buildLineitemProj(spark, dir, projPath)
       registerLineitemProj(spark, projPath)
@@ -2258,8 +2179,7 @@ object Extended {
           s"q113's date range must be pushed into the projection scan:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.ProjectionCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q113Sql: String =
     """SELECT l_returnflag,
@@ -2288,9 +2208,8 @@ object Extended {
     * this is the projection lifecycle: every ingest batch double-lands
     * (base + narrow copies), verification is a cheap scan-level
     * invariant check, and the hot path keeps reading the narrow copy. */
-  def q117ProjMaintained(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q117_").toFile
-    try {
+  def q117ProjMaintained(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q117_") { tmp =>
       val basePath = new java.io.File(tmp, "li_main.parquet").getAbsolutePath
       val projPath = new java.io.File(tmp, "li_main_proj").getAbsolutePath
       val cols = Seq("l_shipdate", "l_returnflag", "l_quantity")
@@ -2324,8 +2243,7 @@ object Extended {
           s"q117's date range must be pushed into the projection scan:\n$plan")
         graft.util.Materialize.sorted(res, col("l_returnflag"))
       } finally graft.plans.ProjectionCatalog.clear()
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** bootstrap ∪ batch = lineitem exactly once (disjoint split on key%7). */
   val q117Sql: String =
@@ -2351,9 +2269,8 @@ object Extended {
     * file at planning; at 100 TB, spark.sql.files respects a sampled
     * merge) — row data is never rewritten, which is the point: evolving
     * a 100 TB table must not touch the 100 TB. */
-  def q86SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q86_").toFile
-    try {
+  def q86SchemaEvolution(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_q86_") { tmp =>
       val path = new java.io.File(tmp, "orders_evolved").getAbsolutePath
       val orders = t(spark, dir, "orders")
       orders.filter(year(col("o_orderdate")) < 1996)
@@ -2370,8 +2287,7 @@ object Extended {
              min(col("o_orderkey")).as("min_key"))
       // one row per priority value: materialize so the temp table drops
       graft.util.Materialize.sorted(res, col("priority"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val q86Sql: String =
     """SELECT coalesce(CASE WHEN year(o_orderdate) >= 1996

@@ -251,11 +251,10 @@ object LlmData {
   def sharedCentroids(spark: SparkSession, dir: String): DataFrame = {
     val path = centroidCache.computeIfAbsent(
       (spark.sparkContext.applicationId, dir), _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cents")
         // shared for the JVM's lifetime (that's the point of the cache),
         // so cleanup is a shutdown hook — without it every battery run
         // leaks one parquet tree per (app, dir) key to /tmp forever
-        graft.util.Fs.deleteOnExit(tmp.toFile)
+        val tmp = graft.util.Fs.tempDirUntilExit("graft_cents")
         val out = tmp.toString + "/centroids.parquet"
         Similarity.kmeansCentroids(embs(spark, dir))
           .write.mode("overwrite").parquet(out)
@@ -278,9 +277,8 @@ object LlmData {
     * contract, so the index IS the transient build, materialized). This
     * is the deployment shape — index built once, probed many times, scan
     * bounded by nprobe directories (pruning asserted in LayoutSpec). */
-  def x71IvfIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x71_").toFile
-    try {
+  def x71IvfIndex(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x71_") { tmp =>
       val idx = new java.io.File(tmp, "ivf").getAbsolutePath
       val e = embs(spark, dir)
       Similarity.buildIvfIndexWith(e, sharedCentroids(spark, dir), idx)
@@ -288,8 +286,7 @@ object LlmData {
         e.filter(col("vec_id") < 10), 5)
       // k × probes rows: materialize so the temp index tree drops eagerly
       graft.util.Materialize.sorted(res, col("p_id"), col("rn"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Stored index ≡ fresh build: the gate x31 already passes. (lazy —
     * x31Sql is declared further down this object) */
@@ -459,8 +456,8 @@ object LlmData {
         val d =
           if (modulus <= 1) docs(spark, dir)
           else docs(spark, dir).filter(pmod(col("doc_id"), lit(modulus)) === 0)
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft_labels_m$modulus")
-        graft.util.Fs.deleteOnExit(tmp.toFile) // JVM-lifetime cache; see sharedCentroids
+        // JVM-lifetime cache; see sharedCentroids
+        val tmp = graft.util.Fs.tempDirUntilExit(s"graft_labels_m$modulus")
         val out = tmp.toString + "/labels.parquet"
         TextDedup.nearDupClusters(d, JaccThreshold)
           .write.mode("overwrite").parquet(out)
@@ -744,9 +741,8 @@ object LlmData {
     * exact new-touching Jaccard pairs of the derived vocab>63 corpus in
     * DuckDB, so the hash gate proves stored-index mining ≡ fresh mining
     * ≡ ground truth. */
-  def x95IndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x95_").toFile
-    try {
+  def x95IndexProbe(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x95_") { tmp =>
       val idx = new java.io.File(tmp, "idx").getAbsolutePath
       val d = wideQuarter(spark, dir).localCheckpoint(true)
       val batch = d.filter(pmod(col("doc_id"), lit(40)) === 36)
@@ -756,8 +752,7 @@ object LlmData {
       val res = graft.operators.LshIndex.probeVerified(spark, idx, d, batch, JaccThreshold)
       // pair-set-sized: materialize so the temp index tree can drop
       graft.util.Materialize.sorted(res, col("a_id"), col("b_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** The new-touching pairs of the derived corpus (batch = doc_id ≡ 36
     * mod 40), exactly. */
@@ -784,9 +779,8 @@ object LlmData {
     * an empty index the arrival-order fold ≡ the one-shot batch miner
     * (StreamingIngestSpec law), so the oracle is x93's exact full-pair
     * set over the same derived corpus. */
-  def x96StreamIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x96_").toFile
-    try {
+  def x96StreamIndexed(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x96_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val idx = new java.io.File(tmp, "idx").getAbsolutePath
       val pairs = new java.io.File(tmp, "pairs").getAbsolutePath
@@ -804,8 +798,7 @@ object LlmData {
         .select(col("a_id"), col("b_id"), col("jacc"))
       // pair-set-sized: materialize so the temp index/checkpoint drop
       graft.util.Materialize.sorted(res, col("a_id"), col("b_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed-indexed miner from empty ≡ batch miner: x93's oracle. */
   val x96Sql: String = x93Sql
@@ -822,9 +815,8 @@ object LlmData {
     * tampered index refuses instead of under-answering. The oracle
     * replays k-means over the even half only, assigns the FULL corpus
     * against those centroids, and probes identically. */
-  def x99IvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x99_").toFile
-    try {
+  def x99IvfAppend(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x99_") { tmp =>
       val e = embs(spark, dir)
       val even = e.filter(pmod(col("vec_id"), lit(2)) === 0)
       val odd = e.filter(pmod(col("vec_id"), lit(2)) =!= 0)
@@ -835,8 +827,7 @@ object LlmData {
       val res = Similarity.ivfTopKFromIndexVerified(spark, idx, e,
         e.filter(col("vec_id") < 10), 5)
       graft.util.Materialize.sorted(res, col("p_id"), col("rn"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   lazy val x99Sql: String = {
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -877,9 +868,8 @@ object LlmData {
     * reproduces x99's batch maintenance exactly, so x99's oracle is the
     * oracle. Per-trigger work ∝ the landed file; the probe reads nprobe
     * cell directories — the continuous-ANN-service twin of x96. */
-  def x100StreamAnnIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x100_").toFile
-    try {
+  def x100StreamAnnIngest(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x100_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val idx = new java.io.File(tmp, "idx").getAbsolutePath
       val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -897,8 +887,7 @@ object LlmData {
       val res = Similarity.ivfTopKFromIndexVerified(spark, idx, e,
         e.filter(col("vec_id") < 10), 5)
       graft.util.Materialize.sorted(res, col("p_id"), col("rn"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed index-fold ≡ batch build+append: x99's oracle. */
   lazy val x100Sql: String = x99Sql
@@ -914,9 +903,8 @@ object LlmData {
     * measurable, oracle-checked signal. The oracle replays the even-half
     * k-means, assigns both halves against the stored centroids, and
     * folds the same exact-unit means. */
-  def x101IvfDrift(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x101_").toFile
-    try {
+  def x101IvfDrift(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x101_") { tmp =>
       val e = embs(spark, dir)
       val even = e.filter(pmod(col("vec_id"), lit(2)) === 0)
       val odd = e.filter(pmod(col("vec_id"), lit(2)) =!= 0)
@@ -924,8 +912,7 @@ object LlmData {
       Similarity.buildIvfIndexWith(even, Similarity.kmeansCentroids(even), idx)
       val res = Similarity.assignmentDrift(odd, idx)
       graft.util.Materialize.sorted(res, col("cell"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   lazy val x101Sql: String = {
     val uExpr = "CAST(floor((CAST(dot AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * " +
@@ -982,9 +969,8 @@ object LlmData {
     * At 100 TB the retrain cost is the rebuild the alarm was already
     * scheduling; the generation protocol adds one marker create and keeps
     * probes lock-free throughout. */
-  def x104IvfRetrain(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x104_").toFile
-    try {
+  def x104IvfRetrain(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x104_") { tmp =>
       val e = embs(spark, dir)
       val even = e.filter(pmod(col("vec_id"), lit(2)) === 0)
       val odd = e.filter(pmod(col("vec_id"), lit(2)) =!= 0)
@@ -1019,8 +1005,7 @@ object LlmData {
       require(after.collect().toSeq == fresh.collect().toSeq,
         "x104: the post-retrain probe must equal the fresh full-corpus build")
       after
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** The full-corpus train + probe replayed in SQL (x99's shape with the
     * training corpus widened from the even half to everything). */
@@ -1432,9 +1417,8 @@ object LlmData {
     * oracle is the exact half-corpus Jaccard pair set x44 already passes
     * — half-corpus like x44, because the battery pays full-corpus LSH in
     * x21/x35 already and the streamed run re-mines per scoring pass. */
-  def x92StreamNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x92_").toFile
-    try {
+  def x92StreamNearDup(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_x92_") { tmp =>
       val landing = new java.io.File(tmp, "landing").getAbsolutePath
       val corpus = new java.io.File(tmp, "corpus").getAbsolutePath
       val pairs = new java.io.File(tmp, "pairs").getAbsolutePath
@@ -1448,8 +1432,7 @@ object LlmData {
         .select(col("a_id"), col("b_id"), col("jacc"))
       // pair-set-sized: materialize so the temp corpus/checkpoint drop
       graft.util.Materialize.sorted(res, col("a_id"), col("b_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed miner from empty ≡ batch miner: x44's half-corpus oracle. */
   val x92Sql: String = x44Sql

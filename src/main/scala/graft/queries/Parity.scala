@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -134,12 +132,11 @@ object Parity {
     * batch B; final table must equal once-appended distinct set with batch
     * A's FLR-005 surviving. Exercises the reference's ON CONFLICT semantics
     * end-to-end through a real parquet table. */
-  def p2DedupAppend(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_p2_").toFile
-    val path = new java.io.File(tmp, "solar_flare_data").getAbsolutePath
-    val keys = Seq("flr_id")
-    val tie = Seq("class_type", "link")
-    try {
+  def p2DedupAppend(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_p2_") { tmp =>
+      val path = new java.io.File(tmp, "solar_flare_data").getAbsolutePath
+      val keys = Seq("flr_id")
+      val tie = Seq("class_type", "link")
       val a = Donki.project(Donki.readJson(spark, Seq(jsonBody(batchA))))
       val b = Donki.project(Donki.readJson(spark, Seq(jsonBody(batchB))))
       DedupAppend.append(spark, a, path, keys, tie)
@@ -152,8 +149,7 @@ object Parity {
       // hand-authored parity fixture, not a data-path operator.
       val read = spark.read.parquet(path)
       graft.util.Materialize.sorted(read, col("flr_id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   val p2Sql: String = {
     val a = dedupSql(valuesTable(batchA, "a"))
@@ -202,9 +198,8 @@ object Parity {
     * gate proves the DSv2 read ≡ the driver-side `readJson` ingest on the
     * same fixture, which puts the engine's custom SOURCE (not just its
     * operators) under the DuckDB gate. */
-  def p4DsvSource(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_p4_").toFile
-    try {
+  def p4DsvSource(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_p4_") { tmp =>
       val fa = new java.io.File(tmp, "a.json")
       val fb = new java.io.File(tmp, "b.json")
       java.nio.file.Files.writeString(fa.toPath, jsonBody(batchA))
@@ -216,8 +211,7 @@ object Parity {
       // fixture-sized result: materialize so the temp payload files drop
       val res = dedupWithId(Donki.project(raw))
       graft.util.Materialize.sorted(res, col("id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** DSv2 ingest ≡ driver-side ingest: the gate p3 already passes. */
   val p4Sql: String = p3Sql
@@ -235,9 +229,8 @@ object Parity {
     * mangling in render/commit/read-back flips the hash. Exercises
     * strings (escaping), ints, nulls for absent keys, and the
     * array-of-struct `instruments` payload. */
-  def p5DsvSink(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_p5_").toFile
-    try {
+  def p5DsvSink(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_p5_") { tmp =>
       val table = new java.io.File(tmp, "flares_jsonl").getAbsolutePath
       val raw = Donki.readJson(spark, Seq(jsonBody(batchA), jsonBody(batchB)))
       raw.write.format("graft-jsonl").mode("overwrite").save(table)
@@ -246,8 +239,7 @@ object Parity {
       // fixture-sized result: materialize so the temp table drops eagerly
       val res = dedupWithId(Donki.project(back))
       graft.util.Materialize.sorted(res, col("id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Sink round trip ≡ no round trip: the gate p3 already passes. */
   val p5Sql: String = p3Sql
@@ -266,9 +258,8 @@ object Parity {
     * read back with the surrogate id — must hash-equal p3's answer.
     * P1-P5 gate the pipeline's pieces; this gates the assembled service
     * the reference user actually migrates to. */
-  def p6StreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_p6_").toFile
-    try {
+  def p6StreamIngest(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Fs.withTempDir("graft_p6_") { tmp =>
       val landing = new java.io.File(tmp, "landing")
       landing.mkdirs()
       val table = new java.io.File(tmp, "solar_flare_data").getAbsolutePath
@@ -282,8 +273,7 @@ object Parity {
       // fixture-sized result: materialize so the temp tree drops eagerly
       val res = Donki.withId(read)
       graft.util.Materialize.sorted(res, col("id"))
-    } finally graft.util.Fs.deleteTree(tmp)
-  }
+    }
 
   /** Streamed pipeline ≡ batch pipeline: the gate p3 already passes. */
   val p6Sql: String = p3Sql

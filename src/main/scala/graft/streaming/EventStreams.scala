@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming restatement of the batch event-time queries
@@ -21,29 +22,24 @@ object EventStreams {
     * TIMESTAMP(MICROS) NTZ across testdata generations (see Tables.events) —
     * so sniff the physical schema from the existing footers once (driver-side
     * metadata read, no data scan) and normalize `ts` to a session-TZ
-    * timestamp the same way the batch loader does. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val physical =
-      try spark.read.option("pathGlobFilter", "events.parquet").parquet(dir).schema
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          // surface the operational cause instead of a bare
-          // unable-to-infer-schema: the sniff needs at least one landed file
-          throw new IllegalStateException(
-            s"readEvents: no events.parquet file has landed in $dir yet — " +
-              "the stream's schema is sniffed from existing footers, so land " +
-              "one file first (or start the stream after the first delivery)", e)
-      }
-    val stream = spark.readStream.schema(physical)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    physical("ts").dataType match {
-      case LongType => stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType => stream.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => stream
+    * timestamp through the batch loader's own [[graft.Tables.withEventsTs]]. */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.withEventsTs(spark) {
+      val physical =
+        try spark.read.option("pathGlobFilter", "events.parquet").parquet(dir).schema
+        catch {
+          case e: org.apache.spark.sql.AnalysisException =>
+            // surface the operational cause instead of a bare
+            // unable-to-infer-schema: the sniff needs at least one landed file
+            throw new IllegalStateException(
+              s"readEvents: no events.parquet file has landed in $dir yet — " +
+                "the stream's schema is sniffed from existing footers, so land " +
+                "one file first (or start the stream after the first delivery)", e)
+        }
+      spark.readStream.schema(physical)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(dir)
     }
-  }
 
   /** Tumbling 1-hour counts/sums with a 1-hour watermark. State is bounded:
     * with N event types, at most ~(watermark/window + 2) × N open windows
@@ -189,13 +185,13 @@ object EventStreams {
     * equivalence. `complete` output mode so still-open windows are emitted
     * too (matching the batch answer on a bounded input). */
   def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    drain(tumblingAgg(readEvents(spark, dir)), queryName)
+    drainToMemory(tumblingAgg(readEvents(spark, dir)), queryName)
 
   /** Same, for the sliding-window twin. */
   def runOnceSliding(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    drain(slidingAgg(readEvents(spark, dir)), queryName)
+    drainToMemory(slidingAgg(readEvents(spark, dir)), queryName)
 
-  private def drain(df: DataFrame, queryName: String): DataFrame = {
+  private def drainToMemory(df: DataFrame, queryName: String): DataFrame = {
     val q = df.writeStream.outputMode("complete")
       .format("memory").queryName(queryName)
       .start()
@@ -204,31 +200,39 @@ object EventStreams {
     df.sparkSession.table(queryName)
   }
 
+  /** The one drain policy — `schedule="@daily", catchup=False` (reference
+    * dags/etl.py:12-13) restated for a stream: process everything landed
+    * under the checkpoint as of now (`Trigger.AvailableNow`, honouring the
+    * source's rate limits such as `maxFilesPerTrigger`), then stop. Blocks
+    * until the query terminates; a failed query's exception propagates
+    * unchanged. The caller configures the writer (sink, output mode,
+    * foreachBatch); every AvailableNow stream in the engine runs here. */
+  def drain(writer: DataStreamWriter[Row], checkpointDir: String): Unit =
+    writer.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .start()
+      .awaitTermination()
+
   /** Incremental ingest of a JSON landing dir into a dedup-append parquet
     * table — the full reference-pipeline restatement under Structured
-    * Streaming (`Trigger.AvailableNow` ≈ `schedule="@daily",
-    * catchup=False`, reference dags/etl.py:12-13): each micro-batch runs
+    * Streaming ([[drain]] ≈ `schedule="@daily", catchup=False`,
+    * reference dags/etl.py:12-13): each micro-batch runs
     * the same projection + idempotent conflict-skip as the batch path, so
     * re-delivered records never duplicate; exactly-once per input file via
     * the checkpoint. */
   def ingestFlares(spark: SparkSession, landingDir: String, tablePath: String,
                    checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val raw = spark.readStream.schema(graft.ingest.Donki.flrSchema)
       .json(landingDir)
-    val q = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    drain(raw.writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // owner = the checkpoint: this lineage's restart re-acquires its
         // own stale lease after a crash (the replay is conflict-skipped)
         graft.operators.DedupAppend.append(
           batch.sparkSession, graft.ingest.Donki.project(batch.toDF()), tablePath,
           keys = Seq("flr_id"), tieBreak = Seq("class_type", "link"),
           owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Streaming NEAR-DUP gate — the LSH analogue of [[ingestFlares]]: each
@@ -253,14 +257,11 @@ object EventStreams {
   def mineNearDupsStream(spark: SparkSession, landingDir: String, corpusPath: String,
                          pairsPath: String, checkpointDir: String,
                          threshold: Double): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
+    drain(spark.readStream.schema(docSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         // consumed by mining (probe + corpus union) and the corpus append
         val newDocs = batch.toDF().localCheckpoint(true)
@@ -274,9 +275,7 @@ object EventStreams {
           keys = Seq("a_id", "b_id"), tieBreak = Nil)
         graft.operators.DedupAppend.append(s, newDocs, corpusPath,
           keys = Seq("doc_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Streaming keyed ingest into a [[graft.operators.SnapshotStore]]
@@ -296,16 +295,13 @@ object EventStreams {
   def snapshotIngestStream(spark: SparkSession, landingDir: String,
                            tablePath: String, checkpointDir: String,
                            keys: Seq[String]): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
+    drain(spark.readStream.schema(docSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         val owner = Some(checkpointDir)
         if (graft.operators.SnapshotStore.versions(s, tablePath).isEmpty)
@@ -316,9 +312,7 @@ object EventStreams {
           graft.operators.SnapshotStore.appendDedup(s, batch.toDF(), tablePath,
             keys, tieBreak = Nil, owner = owner)
         ()
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** SNAPSHOT CDC AS A STREAMING SOURCE — the subscription form of
@@ -344,15 +338,12 @@ object EventStreams {
     * re-scan — and the marker listing is metadata-sized. */
   def snapshotCdcStream(spark: SparkSession, tablePath: String,
                         mvPath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.SnapshotStore
-    val q = spark.readStream.format("text")
+    drain(spark.readStream.format("text")
       .load(s"$tablePath/_snapshots/commit-*")
       .select(col("_metadata.file_path").as("marker"))
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         val owner = Some(checkpointDir)
         // marker names only: metadata-sized (one row per commit in batch)
@@ -411,9 +402,7 @@ object EventStreams {
             ()
           }
         }
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Stream-snapshot enrichment: each micro-batch joins against the dim
@@ -429,22 +418,17 @@ object EventStreams {
   def enrichAgainstSnapshotStream(spark: SparkSession, landingDir: String,
                                   dimPath: String, outPath: String,
                                   checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val evSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("user_id", LongType)))
-    val q = spark.readStream.schema(evSchema).json(landingDir)
+    drain(spark.readStream.schema(evSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         val dim = graft.operators.SnapshotStore.readRelation(s, dimPath)
         val enriched = batch.toDF().join(broadcast(dim), Seq("user_id"))
         graft.operators.DedupAppend.append(s, enriched, outPath,
           keys = Seq("event_id"), tieBreak = Nil, owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** The UNBOUNDED-VOCABULARY streamed near-dup mining service —
@@ -467,15 +451,13 @@ object EventStreams {
   def mineNearDupsStreamIndexed(spark: SparkSession, landingDir: String,
                                 indexPath: String, pairsPath: String,
                                 checkpointDir: String, threshold: Double): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
+    drain(spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1") // one landed file = one fold step
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .json(landingDir)
+      .writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         // consumed by the index fold and the probe: materialize once
         val newDocs = batch.toDF().localCheckpoint(true)
@@ -490,9 +472,7 @@ object EventStreams {
         val pairs = graft.operators.LshIndex.probe(s, indexPath, newDocs, threshold)
         graft.operators.DedupAppend.append(s, pairs, pairsPath,
           keys = Seq("a_id", "b_id"), tieBreak = Nil, owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Continuous ANN-index maintenance: each landed parquet file of
@@ -510,16 +490,14 @@ object EventStreams {
     * via buildIvfIndex when assignment quality decays). */
   def maintainIvfIndexStream(spark: SparkSession, landingDir: String,
                              indexPath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema).parquet(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
+    drain(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one landed file = one fold step
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .parquet(landingDir)
+      .writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         // consumed by seed-order scan + assignment (+ Lloyd iterations on
         // bootstrap): materialize once
@@ -530,9 +508,7 @@ object EventStreams {
         else
           graft.operators.Similarity.appendToIvfIndex(vecs, indexPath,
             owner = Some(checkpointDir))
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Streaming SEGMENT-DEDUP gate — [[mineNearDupsStream]]'s shape one
@@ -550,14 +526,11 @@ object EventStreams {
   def segmentGateStream(spark: SparkSession, landingDir: String, corpusPath: String,
                         statsPath: String, checkpointDir: String,
                         segTokens: Int): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
+    drain(spark.readStream.schema(docSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         val newDocs = batch.toDF().localCheckpoint(true)
         val existing =
@@ -570,9 +543,7 @@ object EventStreams {
           keys = Seq("doc_id"), tieBreak = Nil)
         graft.operators.DedupAppend.append(s, newDocs, corpusPath,
           keys = Seq("doc_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** The SCORED streaming gate (q70): AvailableNow ingest of the events
@@ -590,12 +561,9 @@ object EventStreams {
     * decides which gate goes where. */
   def tumblingMaintainStream(spark: SparkSession, dir: String,
                              statePath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = readEvents(spark, dir)
+    drain(readEvents(spark, dir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val partial = batch.toDF()
           .groupBy(window(col("ts"), "1 hour").getField("start")
               .cast(TimestampNTZType).as("window_start"),
@@ -604,9 +572,7 @@ object EventStreams {
                sum(col("value").cast(DecimalType(18, 2)))
                  .cast(DecimalType(18, 2)).as("sum_dec"))
         mergeTumbling(batch.sparkSession, partial, statePath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Merge a partial tumbling rollup into the maintained table: sum of
@@ -630,20 +596,15 @@ object EventStreams {
     * law a scored fact. */
   def cdcCompactStream(spark: SparkSession, dir: String,
                        statePath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = readEvents(spark, dir)
+    drain(readEvents(spark, dir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val ch = batch.toDF().selectExpr("user_id", "event_type",
           "unix_micros(ts) as ts_us", "event_id",
           "cast(round(value * 100) as bigint) as cents")
         graft.operators.UpsertState.merge(batch.sparkSession, ch, statePath,
           keys = Seq("user_id"), version = Seq("ts_us", "event_id"))
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Streaming CDC-UPSERT gate — the latest-wins counterpart of
@@ -659,21 +620,16 @@ object EventStreams {
     * .current]] is the live view. */
   def cdcUpsertStream(spark: SparkSession, landingDir: String, statePath: String,
                       checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val changeSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("ts_us", LongType), StructField("event_id", LongType),
       StructField("cents", LongType)))
-    val q = spark.readStream.schema(changeSchema).json(landingDir)
+    drain(spark.readStream.schema(changeSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.operators.UpsertState.merge(batch.sparkSession, batch.toDF(),
           statePath, keys = Seq("user_id"), version = Seq("ts_us", "event_id"))
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Streaming ROLLUP-maintenance gate — materialized-view maintenance as
@@ -686,20 +642,15 @@ object EventStreams {
     * StreamingIngestSpec asserts streamed slices ≡ the full recompute. */
   def rollupMaintainStream(spark: SparkSession, landingDir: String,
                            rollupPath: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val changeSchema = StructType(Seq(
       StructField("event_type", StringType), StructField("ts_us", LongType),
       StructField("cents", LongType)))
-    val q = spark.readStream.schema(changeSchema).json(landingDir)
+    drain(spark.readStream.schema(changeSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         graft.operators.RollupState.merge(batch.sparkSession,
           graft.operators.RollupState.partial(batch.toDF()), rollupPath, batchId)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Streaming SHARD-DEAL gate — continuous sharding for a training
@@ -716,31 +667,26 @@ object EventStreams {
     * and bound per-shard count spread by the batch count. */
   def shardDealStream(spark: SparkSession, landingDir: String, assignPath: String,
                       checkpointDir: String, numShards: Int): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val assignSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("n_tok", LongType),
       StructField("shard", LongType)))
-    val q = spark.readStream.schema(docSchema).json(landingDir)
+    drain(spark.readStream.schema(docSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         val newDocs = batch.toDF().localCheckpoint(true)
         val existing =
           if (!graft.operators.DedupAppend.exists(s, assignPath))
-            s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), assignSchema)
+            s.createDataFrame(new java.util.ArrayList[Row](), assignSchema)
           else s.read.parquet(assignPath) // replay safety: exclude this batch's ids
             .join(broadcast(newDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
         val assigned = graft.operators.Curation
           .shardDealIncremental(existing, newDocs, numShards)
         graft.operators.DedupAppend.append(s, assigned, assignPath,
           keys = Seq("doc_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 
   /** Event-time sessionization with explicit per-user state
@@ -875,21 +821,16 @@ object EventStreams {
   def asofEnrichStream(spark: SparkSession, landingDir: String,
                        ordersPath: String, outPath: String,
                        checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val eventSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts_us", LongType),
       StructField("event_id", LongType)))
-    val q = spark.readStream.schema(eventSchema).json(landingDir)
+    drain(spark.readStream.schema(eventSchema).json(landingDir)
       .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val sp = batch.sparkSession
         graft.operators.DedupAppend.append(sp,
           asofEnrich(batch.toDF(), sp.read.parquet(ordersPath)),
           outPath, keys = Seq("event_id"), tieBreak = Nil)
-      }
-      .start()
-    q.awaitTermination()
+      }, checkpointDir)
   }
 }

@@ -17,28 +17,27 @@ object Confs {
     * [defaultParallelism/4, defaultParallelism]: the upper clamp keeps a
     * local battery from opening thousands of stores over tiny state; the
     * LOWER clamp keeps real join/agg work parallel when the state volume
-    * is small — a measured r11 sweep over the five state gates
-    * (SPARK_GRAFT_STATE_PARTITIONS ∈ {1,4,8,16,32} on local[32], sf0.1)
-    * put 1 partition at 24.0 s total (stream-stream join serialized,
-    * q118 7.7 s), 8 at 15.8 s (q118 3.5 s), 32 at 28.8 s (per-store
-    * checkpoint overhead). On a real cluster the bytes/64 MiB term
-    * dominates and the same rule saturates the executors. Input size =
-    * the landed bytes under `inputPath` (driver metadata read, no data
-    * I/O). */
+    * is small — a measured r11 sweep over the five state gates (fixed
+    * partition counts on local[32], sf0.1) put 1 partition at 24.0 s
+    * total (stream-stream join serialized, q118 7.7 s), 8 at 15.8 s
+    * (q118 3.5 s), 32 at 28.8 s (per-store checkpoint overhead). On a
+    * real cluster the bytes/64 MiB term dominates and the same rule
+    * saturates the executors. Known gap: on a small host the floor is
+    * too low for stream-stream joins — on local[4], sf0.1 (where the rule
+    * gives 1) q118 measured 7.9–10.4 s at 1 partition vs 5.8–10.9 s at
+    * 8 (medians 9.4 vs 6.9 s over four runs each), q126 9.8–12.2 vs
+    * 7.5–12.7 s (medians 11.0 vs 8.7 s). Input size = the landed bytes
+    * under `inputPath` (driver metadata read, no data I/O). */
   def stateSizedPartitions(spark: SparkSession, inputPath: String): Int = {
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").flatMap(_.toIntOption) match {
-      case Some(n) => n // measurement override (A/B harness only)
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(inputPath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes =
-          try fs.getContentSummary(p).getLength
-          catch { case scala.util.control.NonFatal(_) => 0L }
-        val target = 64L * 1024 * 1024
-        val cores = spark.sparkContext.defaultParallelism.toLong
-        val floor = math.max(1L, cores / 4)
-        math.max(floor, math.min(cores, (bytes + target - 1) / target)).toInt
-    }
+    val p = new org.apache.hadoop.fs.Path(inputPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes =
+      try fs.getContentSummary(p).getLength
+      catch { case scala.util.control.NonFatal(_) => 0L }
+    val target = 64L * 1024 * 1024
+    val cores = spark.sparkContext.defaultParallelism.toLong
+    val floor = math.max(1L, cores / 4)
+    math.max(floor, math.min(cores, (bytes + target - 1) / target)).toInt
   }
 
   def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {

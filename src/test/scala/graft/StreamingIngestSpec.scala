@@ -107,6 +107,28 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(graft.operators.LshIndex.verifyIndex(docs, idx))
   }
 
+  test("indexed streamed miner: two landed files drain as two fold steps") {
+    import org.apache.spark.sql.functions._
+    graft.util.Fs.withTempDir("graft_idx_two_files_") { tmp =>
+      val landing = new java.io.File(tmp, "landing"); landing.mkdirs()
+      val ckpt = new java.io.File(tmp, "ckpt")
+      val docs = Tables.t(spark, sf, "documents").filter(col("doc_id") < 60)
+        .select(col("doc_id"), col("text"))
+      def land(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        Files.writeString(landing.toPath.resolve(name), df.toJSON.collect().mkString("\n"))
+      land("b1.json", docs.filter(col("doc_id") < 30))
+      land("b2.json", docs.filter(col("doc_id") >= 30))
+      // both files are landed before ONE drain: the reader-side
+      // maxFilesPerTrigger must still split them into bootstrap + append
+      graft.streaming.EventStreams.mineNearDupsStreamIndexed(spark, landing.toString,
+        new java.io.File(tmp, "idx").toString, new java.io.File(tmp, "pairs").toString,
+        ckpt.toString, 0.9)
+      val committed = new java.io.File(ckpt, "commits").list()
+        .filter(_.forall(_.isDigit)).map(_.toLong).sorted.toSeq
+      assert(committed == Seq(0L, 1L), s"committed batch ids: $committed")
+    }
+  }
+
   test("streamed IVF maintenance: arrival batches fold to the batch index; idle drain is a no-op") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity

@@ -360,4 +360,35 @@ class StreamingSpec extends AnyFunSuite {
           s"sizes state=${stateKeys.size} retained=${retained.size}")
     } finally graft.util.Fs.deleteTree(root.toFile)
   }
+
+  test("drain: a failing foreachBatch rethrows through the drain and leaves no active stream") {
+    graft.util.Fs.withTempDir("graft_drain_fail_") { tmp =>
+      val landing = new java.io.File(tmp, "landing").getAbsolutePath
+      spark.range(3).write.json(landing)
+      val boom = new IllegalStateException("batch failed")
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        EventStreams.drain(spark.readStream.schema("id LONG").json(landing)
+          .writeStream
+          .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            throw boom
+          }, new java.io.File(tmp, "ckpt").getAbsolutePath)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).contains(boom),
+        s"the batch's own failure must be the cause: $e")
+      assert(spark.streams.active.isEmpty, "a failed drain must not leave its query running")
+    }
+  }
+
+  test("withTempDir deletes its tree when the body throws") {
+    var seen: java.io.File = null
+    val e = intercept[IllegalStateException] {
+      graft.util.Fs.withTempDir("graft_tmp_law_") { tmp =>
+        seen = tmp
+        spark.range(3).write.parquet(new java.io.File(tmp, "t").getAbsolutePath)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(seen != null && !seen.exists(), s"$seen must be deleted")
+  }
 }
